@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -191,6 +191,12 @@ object Bench {
     }
   }
 
+  /** Runs `df` to its complete result into the `noop` sink. `.count()`
+    * would let Catalyst prune every column and expression the count does
+    * not read, and time less than the query's real work. */
+  private def runToCompletion(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   /** Worst-5 members without a ledger row — nonempty means the round must
     * either add the row (with a measured decade leg) or treat the query
     * as a plan regression; the artifact carries the list either way. */
@@ -224,7 +230,8 @@ object Bench {
     val warmupDir = "/root/testdata/sf0.001"
     val warmupSec: Map[String, Double] = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try fn(spark, warmupDir).count() catch { case _: Throwable => () }
+      try runToCompletion(fn(spark, warmupDir))
+      catch { case _: Throwable => () }
       name -> (System.nanoTime() - t0) / 1e9
     }.toMap
     spark.catalog.clearCache()
@@ -256,7 +263,7 @@ object Bench {
     val results = selected.map { case (name, fn) =>
       def timed(): (Double, Boolean) = {
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
+        val ok = try { runToCompletion(fn(spark, sfDir)); true }
                  catch { case _: Throwable => false }
         val sec = (System.nanoTime() - t0) / 1e9
         // cached intermediates (LSH bucket/shingle tables etc.) are dropped

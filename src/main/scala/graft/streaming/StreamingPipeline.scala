@@ -513,15 +513,24 @@ object StreamingPipeline {
     StructField("srch_destination_type_id", IntegerType),
     StructField("hotel_id", LongType)))
 
-  /** S2/S3 parity — JSON payload column → typed columns. Fields absent
-    * from the schema are dropped (KSQL schema-on-read semantics,
-    * /root/reference/ci_cd/ksql/create_stream.json:2); null payloads
-    * survive as null structs and are dropped by the P3 guard. */
+  /** S2/S3 parity — JSON payload column → typed columns, each payload
+    * parsed exactly once. Null payloads, and payloads for which `from_json`
+    * returns null (empty or whitespace-only strings), are dropped; every
+    * other payload becomes one `schema` record, with all fields null if it
+    * is malformed. Fields absent from the schema are dropped (KSQL
+    * schema-on-read semantics, the reference's
+    * ci_cd/ksql/create_stream.json:2).
+    *
+    * The parse sits in a one-element `explode` because Catalyst's
+    * PushDownPredicates would otherwise copy `from_json` into the null
+    * filter below the projection and parse every payload twice; a filter
+    * on a generator's output cannot be pushed below the `Generate`. */
   def fromJsonPayload(raw: DataFrame, payloadCol: String = "value",
                       schema: StructType = expediaSchema): DataFrame =
     raw
       .filter(col(payloadCol).isNotNull)
-      .select(from_json(col(payloadCol).cast("string"), schema).as("r"))
+      .select(explode(array(
+        from_json(col(payloadCol).cast("string"), schema))).as("r"))
       .filter(col("r").isNotNull)
       .select("r.*")
 

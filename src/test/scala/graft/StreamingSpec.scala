@@ -89,12 +89,50 @@ class StreamingSpec extends SparkSpec {
         """{"id":2,"hotel_id":200,"srch_ci":"2020-01-01","srch_co":"2020-01-20"}""")
       q.processAllAvailable()
       val out = spark.table("ext_topic").as[String].collect().sorted
-      // malformed row: from_json yields null struct for all fields → id null
+      // malformed row: from_json yields a struct of null fields → id null
       assert(out.length == 3)
       val cats = out.map(s =>
         "\"stay_category\":\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1)))
       assert(cats.flatten.toSet == Set("Short stay", "Long stay", "Erroneous data"))
     } finally q.stop()
+  }
+
+  test("fromJsonPayload: one parse per payload, same rows as the two-parse form") {
+    val payloads: Seq[String] = Seq(null, "", "   ", "\t\n", "null",
+      "not json", """{"id":1,"hotel_id":10,"srch_ci":"2020-""",
+      """[{"id":2,"hotel_id":20}]""", "[]", "{}",
+      """{"id":"three","hotel_id":30}""",
+      """{"id":4,"hotel_id":40,"extra":"x"}""")
+    // file-backed on purpose: a LocalRelation is folded at optimization
+    // time and its plan would show no parse at all
+    val dir = java.nio.file.Files.createTempDirectory("graft_decode")
+      .resolve("payloads").toString
+    payloads.toDF("value").coalesce(1).write.parquet(dir)
+    val raw = spark.read.parquet(dir)
+    val once = StreamingPipeline.fromJsonPayload(raw)
+    // reference: the former form, whose null filter on the parsed struct
+    // Catalyst pushes below the projection as a second from_json
+    val twice = raw
+      .filter(col("value").isNotNull)
+      .select(from_json(col("value").cast("string"),
+        StreamingPipeline.expediaSchema).as("r"))
+      .filter(col("r").isNotNull)
+      .select("r.*")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(once.schema == twice.schema)
+    assert(once.columns.length == 20)
+    assert(rows(once) == rows(twice))
+    assert(rows(once).size <= payloads.size - 4,
+      "null, empty and whitespace-only payloads must be dropped")
+    def parses(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect {
+          case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+        }.size).sum
+      }.sum
+    assert(parses(twice) == 2)
+    assert(parses(once) == 1, once.queryExecution.optimizedPlan.toString)
   }
 
   test("flatMapGroupsWithState: custom per-key state across batches") {
