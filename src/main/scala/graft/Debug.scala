@@ -1,177 +1,35 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Ad-hoc instrumentation main for the dev loop (not part of the driver
-  * contract). Currently: LSH bucket-size distribution + candidate counts. */
+/** Interleaved A/B of the scan fan-out per query (dev-loop tool):
+  * alternate OFF/ON rounds within one JVM so a slow host phase hits both
+  * arms equally (the spot-bench runs disagreed by 30% on identical
+  * plans). Arm ON enables the `Tables.loadFanned` call sites;
+  * arm OFF disables them. Prints min-of-3 per arm.
+  *
+  * Usage: tools/run.sh graft.Debug <sfDir> ab <query>[,<query>...] ...
+  */
 object Debug {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    require(args.length > 2 && args(1) == "ab",
+      "usage: graft.Debug <sfDir> ab <query>[,<query>...] ...")
+    val sfDir = args(0)
+    val qs = args.drop(2).mkString(",").split(",").map(_.trim).filter(_.nonEmpty)
     val spark = GraftSession.getOrCreate()
-    if (args.length > 1 && args(1) == "cc") { ccBreakdown(spark, sfDir); spark.stop(); return }
-    if (args.length > 1 && args(1) == "bloom") { bloomBreakdown(spark, sfDir); spark.stop(); return }
-    if (args.length > 1 && args(1) == "ab") {
-      abFanout(spark, sfDir, args.drop(2).mkString(",").split(",").map(_.trim))
-      spark.stop(); return
-    }
-    val docs = {
-      val d = graft.sources.Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      val exact = d.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val near = d.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          concat(col("text"), lit(" graft near dup tail")).as("text"))
-      d.unionByName(exact).unionByName(near)
-    }
-    val t0 = System.nanoTime()
-    val buckets = graft.operators.Dedup.minhashBuckets(docs, "doc_id", "text", 3, 16, 4)
-    val sizes = buckets.groupBy("band", "band_key").count()
-    sizes.select(
-      count(lit(1)).as("n_buckets"),
-      max("count").as("max_bucket"),
-      expr("percentile_approx(count, 0.99)").as("p99"),
-      sum(col("count") * (col("count") - 1) / 2).as("candidate_pairs"))
-      .show(false)
-    println(s"bucket stats in ${(System.nanoTime() - t0) / 1e9}s")
-    val t1 = System.nanoTime()
-    println("docs=" + docs.count())
-    val sig = docs.select(graft.functions.HashFunctions.minhashFromHashes(
-      graft.operators.Dedup.hashedShingles(col("text"), 3), 64).as("sig"))
-    println("sig checksum=" + sig.select(sum(element_at(col("sig"), 1))).first().getLong(0))
-    println(s"signature pass (hashed shingles) in ${(System.nanoTime() - t1) / 1e9}s")
-    spark.stop()
-  }
-
-  /** Phase timing for incrementalDedupBloom. */
-  private def bloomBreakdown(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    import graft.functions.Bloom
-    import graft.operators.Dedup
-    val d = graft.sources.Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    val exact = d.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val near = d.filter(pmod(col("doc_id"), lit(5)) === 0)
-      .select((col("doc_id") + 2000000L).as("doc_id"),
-        concat(col("text"), lit(" graft near dup tail")).as("text"))
-    val aug = d.unionByName(exact).unionByName(near)
-    val newDocs = aug.filter(col("doc_id") >= 1000000L)
-    val corpus = aug.filter(col("doc_id") < 1000000L)
-    def tm[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[bloom] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-    }
-    val words = 16384
-    def fp(df: org.apache.spark.sql.DataFrame) = df.select(
-      col("doc_id"), graft.functions.TextFunctions.contentFingerprint(col("text")).as("fp"))
-    val fpWords = tm("fp bloom build")(Bloom.buildWords(
-      fp(corpus).select(xxhash64(col("fp")).as("key")), "key", words))
-    val fpB = Bloom.literal(fpWords)
-    tm("fp suspects count")(fp(newDocs)
-      .filter(Bloom.mightContain(fpB, xxhash64(col("fp")), words)).count())
-    val shOld = Dedup.hashedShingleTable(corpus, "doc_id", "text", 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tm("shOld materialize")(shOld.count())
-    val bOld = Dedup.bucketsFromShingles(shOld, "doc_id", 16, 4)
-      .select(col("band"), col("band_key"), col("doc_id").as("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tm("bOld materialize")(bOld.count())
-    val bandWords = tm("band bloom build")(Bloom.buildWords(
-      bOld.select(xxhash64(col("band"), col("band_key")).as("key")), "key", words))
-    val bandB = Bloom.literal(bandWords)
-    val shNew = Dedup.hashedShingleTable(newDocs, "doc_id", "text", 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tm("shNew materialize")(shNew.count())
-    val bNew = Dedup.bucketsFromShingles(shNew, "doc_id", 16, 4)
-      .select(col("band"), col("band_key"), col("doc_id").as("id_a"))
-    tm("bNew suspects count")(bNew
-      .filter(Bloom.mightContain(bandB,
-        xxhash64(col("band"), col("band_key")), words)).count())
-    tm("full incrementalDedupBloom")(
-      Dedup.incrementalDedupBloom(newDocs, corpus, "doc_id", "text").count())
-    tm("full incrementalDedup")(
-      Dedup.incrementalDedup(newDocs, corpus, "doc_id", "text").count())
-  }
-
-  /** Phase timing for dedup_clusters: pairs pipeline vs CC loop. */
-  private def ccBreakdown(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    val docs = {
-      val d = graft.sources.Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      val exact = d.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val near = d.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          concat(col("text"), lit(" graft near dup tail")).as("text"))
-      d.unionByName(exact).unionByName(near)
-    }
-    def tm[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[cc] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-    }
-    val pairs = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text",
-      shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.6)
-      .select("id_a", "id_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tm("pairs materialize")(pairs.count())
-    val edges = tm("edges distinct+persist") {
-      val e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(); e
-    }
-    var labels = tm("labels init ckpt") {
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("lbl", col("id")).localCheckpoint()
-    }
-    (0 until 3).foreach { i =>
-      val viaNbr = edges
-        .join(labels.select(col("id").as("dst"), col("lbl")), Seq("dst"))
-        .select(col("src").as("id"), col("lbl"))
-      val prop = tm(s"iter$i prop ckpt") {
-        labels.unionByName(viaNbr)
-          .groupBy("id").agg(min("lbl").as("lbl")).localCheckpoint()
-      }
-      val next = tm(s"iter$i jump ckpt") {
-        prop.join(prop.select(col("id").as("lbl"), col("lbl").as("lbl2")),
-            Seq("lbl"), "left")
-          .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
-          .localCheckpoint()
-      }
-      tm(s"iter$i sum") {
-        next.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-      }
-      labels = next
-    }
-    tm("full dedup_clusters query") {
-      SparkEntry.queries("dedup_clusters")(spark, sfDir).count()
-    }
-  }
-
-  /** Interleaved A/B of the scan fan-out per query: alternate OFF/ON
-    * rounds within one JVM so a slow host phase hits both arms equally
-    * (the spot-bench runs disagreed by 30% on identical plans). Prints
-    * min-of-3 per arm. `names` may include `fanned=<csv>` to set the arm-B
-    * table list (default: the session default). */
-  private def abFanout(spark: org.apache.spark.sql.SparkSession,
-                       sfDir: String, names: Array[String]): Unit = {
-    val onTables = names.collectFirst {
-      case n if n.startsWith("fanned=") => n.stripPrefix("fanned=").replace('+', ',')
-    }.getOrElse("documents,embeddings,events")
-    val qs = names.filterNot(_.startsWith("fanned="))
-    def run(name: String, tables: String): Double = {
-      // "" = arm A: kill the fan-out entirely (including tF force sites);
-      // otherwise arm B with the given auto-fan table list
-      spark.conf.set("spark.graft.scan.fanout", (tables != "").toString)
-      spark.conf.set("spark.graft.scan.fanout.tables", tables)
+    def run(name: String, fanned: Boolean): Double = {
+      spark.conf.set("spark.graft.scan.fanout", fanned.toString)
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
+      Bench.runToCompletion(SparkEntry.queries(name)(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       sec
     }
     for (q <- qs) {
-      run(q, "") // warmup (codegen etc.), fanout off
+      run(q, fanned = false) // warmup (codegen etc.)
       val (off, on) = (Array.fill(3)(0.0), Array.fill(3)(0.0))
-      for (i <- 0 until 3) { off(i) = run(q, ""); on(i) = run(q, onTables) }
+      for (i <- 0 until 3) { off(i) = run(q, fanned = false); on(i) = run(q, fanned = true) }
       println(f"[ab] $q%-32s off=${off.min}%6.2f on=${on.min}%6.2f " +
         f"(off ${off.map(x => f"$x%.2f").mkString("/")} on ${on.map(x => f"$x%.2f").mkString("/")})")
     }
+    spark.stop()
   }
 }

@@ -1,9 +1,11 @@
 package graft
 
-/** Dumps `explain("formatted")` for selected queries — the plan-review
-  * loop demanded by the scale mandate: verify pushdown/pruning reach the
-  * scan, dims broadcast, and the hot path stays in WholeStageCodegen.
-  * Usage: tools/run.sh graft.Plans [sfDir] [query ...]
+/** Dumps `explain("formatted")` for selected queries to stdout — the
+  * plan-review loop demanded by the scale mandate: verify pushdown/pruning
+  * reach the scan, dims broadcast, and the hot path stays in
+  * WholeStageCodegen. Spark logs go to stderr, so before/after evidence
+  * files are made by redirecting stdout, one query per file.
+  * Usage: tools/run.sh graft.Plans [sfDir] [query ...] > plans/<tag>/<query>_before.txt
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -15,6 +17,7 @@ object Plans {
     names.foreach { n =>
       println(s"\n=================== $n ===================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

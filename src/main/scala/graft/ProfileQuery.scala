@@ -15,10 +15,10 @@ object ProfileQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm run (codegen/JIT), then the measured run
-    SparkEntry.queries(name)(spark, sfDir).count()
+    Bench.runToCompletion(SparkEntry.queries(name)(spark, sfDir))
     spark.catalog.clearCache()
     val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir).count()
+    Bench.runToCompletion(SparkEntry.queries(name)(spark, sfDir))
     println(f"[profile] $name total ${(System.nanoTime() - t0) / 1e9}%.2fs")
     spark.stop()
     // parse the event log: stage name/duration/task counts

@@ -714,7 +714,8 @@ object SparkEntry {
 
   /** One per implemented operator from SURVEY.md §2 — composed from the
     * per-family registration files under graft/entry/ (names are disjoint
-    * across families; EntryCompositionSpec pins the exact 416-name set). */
+    * across families; EntryCompositionSpec pins the exact name set: the
+    * round-10 names plus each later addition). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     EntryCore.queries ++
     EntryRelational.queries ++

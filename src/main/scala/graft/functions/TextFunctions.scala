@@ -128,14 +128,6 @@ object TextFunctions {
         i => array_join(slice(ts, i + 1, lit(n)), " ")))
   }
 
-  /** Character n-gram shingles over the lowercased, space-collapsed text. */
-  def charShingles(text: Column, n: Int): Column = {
-    val t = regexp_replace(lower(text), "\\s+", " ")
-    val len = length(t)
-    when(len <= n, array(t)).otherwise(
-      transform(sequence(lit(1), len - n + 1), i => substring(t, i, lit(n))))
-  }
-
   /** PII redaction for training corpora: emails → [EMAIL], IPv4 → [IP],
     * phone-shaped numbers → [PHONE]. Patterns are RE2-compatible (no
     * lookaround, no backrefs) so the DuckDB oracle applies the IDENTICAL

@@ -173,17 +173,6 @@ object Dedup {
     docs.join(doomed, Seq(idCol), "left_anti")
   }
 
-  /** Winnowing fingerprints (the MOSS plagiarism-detection scheme): the
-    * minimum shingle hash of every sliding `window` of consecutive
-    * shingles, deduplicated. Guarantees any shared run of ≥
-    * window+shingleSize−1 tokens yields a shared print, while keeping
-    * ~1/window of the shingle hashes — at 100 TB the inverted index is
-    * `window`× smaller than a full shingle index for the same
-    * contiguous-overlap detection. Pure array expressions, zero shuffle. */
-  def winnowedPrints(text: Column, shingleSize: Int = 3,
-                     window: Int = 4): Column =
-    HashFunctions.winnow(hashedShingles(text, shingleSize), window)
-
   /** Contiguous-overlap pairs via winnowing: docs sharing ≥ `minShared`
     * winnowed fingerprints. Same df-capped inverted-index shuffle shape
     * as the shingle variants, over an index `window`× smaller. */
@@ -278,18 +267,6 @@ object Dedup {
     // right side — one exchange fewer at every scale
     val doomed = minhashPairs(docs, idCol, textCol, shingleSize, bands,
       rowsPerBand, threshold)
-      .select(col("id_b").as(idCol))
-    docs.join(doomed, Seq(idCol), "left_anti")
-  }
-
-  /** `minhashDedup` with the pair generation fed by a precomputed (id, hs)
-    * shingle table for `docs`. */
-  def minhashDedupFromShingles(docs: DataFrame, sh: DataFrame, idCol: String,
-                               bands: Int = 16, rowsPerBand: Int = 4,
-                               threshold: Double = 0.8): DataFrame = {
-    // no distinct (r15 opt): see minhashDedup
-    val doomed = minhashPairsFromShingles(sh, idCol, bands, rowsPerBand,
-      threshold)
       .select(col("id_b").as(idCol))
     docs.join(doomed, Seq(idCol), "left_anti")
   }
@@ -504,112 +481,6 @@ object Dedup {
       iter += 1
     }
     p0.unpersist()
-    labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
-  }
-
-  /** Connected components by ALTERNATING large-star / small-star edge
-    * rewriting (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14 — public algorithm):
-    *
-    *   large-star(u): every neighbor v > u re-attaches to
-    *     m = min(Γ(u) ∪ {u});
-    *   small-star(u): every neighbor v ≤ u (and u itself) attaches to m.
-    *
-    * Both phases are one groupBy-min + one re-join on the SAME key, and
-    * the edge set converges to stars centered at component minima in
-    * O(log² n) rounds (2–3 on dense near-dup graphs). Compared to the
-    * label-propagation + pointer-jump loop above, rounds rewrite the edge
-    * list instead of maintaining a separate label table — on graphs with
-    * heavy skew (one giant component) the star forms shrink the edge list
-    * geometrically, which bounds every subsequent shuffle.
-    *
-    * Measured head-to-head on the engine's near-dup pair graphs (sf0.1,
-    * dedup_clusters + best_of_cluster + embedding_clusters, same host):
-    * the propagation+jump loop won 9.9 s to 12.9 s — near-dup components
-    * are small and dense, so propagation fixpoints in ~2 iterations and
-    * the star phases' extra edge-rewrite shuffles never pay off. The
-    * queries therefore default to [[connectedComponents]]; this variant
-    * is the right tool when components are LARGE or high-diameter
-    * (social/web graphs), where geometric edge shrinkage beats a
-    * full-size label table joined every round.
-    *
-    * Same contract as [[connectedComponents]]: (doc_id, cluster_id) with
-    * cluster_id = min node id of the component, every node appearing in
-    * `pairs` labeled. */
-  def connectedComponentsStar(pairs: DataFrame, idA: String = "id_a",
-                              idB: String = "id_b",
-                              maxIters: Int = 25): DataFrame = {
-    val p0 = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p0.count()
-    // canonical directed form (larger → smaller), deduped: the star
-    // phases preserve this orientation
-    var cur = p0
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
-    p0.unpersist()
-
-    def labelsOf(e: DataFrame): DataFrame = e
-      .select(col("src").as("id"), col("dst").as("lbl"))
-      .unionByName(e.select(col("dst").as("id"), col("dst").as("lbl")))
-      .groupBy("id").agg(min("lbl").as("lbl"))
-    // convergence fingerprint: at the star fixpoint the canonical edge
-    // set is literally unchanged, so (edge count, Σsrc, Σdst, Σ label)
-    // all freeze together — comparing the four exact decimals is one
-    // tiny aggregate per side and cannot stall mid-run (labels alone
-    // could plateau a round before the edges finish reshaping)
-    def stats(e: DataFrame, l: DataFrame): Seq[java.math.BigDecimal] = {
-      val er = e.agg(
-        coalesce(count(lit(1)).cast("decimal(38,0)"),
-          lit(java.math.BigDecimal.ZERO)),
-        coalesce(sum(col("src").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO)),
-        coalesce(sum(col("dst").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).head()
-      val lr = l.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head()
-      Seq(er.getDecimal(0), er.getDecimal(1), er.getDecimal(2),
-        lr.getDecimal(0))
-    }
-
-    var labels = labelsOf(cur).localCheckpoint()
-    var prevStats = stats(cur, labels)
-    var converged = cur.isEmpty
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // large-star over the symmetric neighborhood: (v, m) for v ∈ Γ(u),
-      // v > u — each emitted edge keeps the larger→smaller orientation
-      // because m ≤ u < v
-      val sym = cur.unionByName(
-        cur.select(col("dst").as("src"), col("src").as("dst")))
-      val lsMin = sym.groupBy("src")
-        .agg(least(min("dst"), col("src")).as("m"))
-      val ls = sym.join(lsMin, Seq("src"))
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .distinct()
-        .localCheckpoint()
-      // small-star over the directed (u > v) edges: v ∈ Γ⁻(u) ∪ {u},
-      // v ≠ m re-attach to m
-      val ssMin = ls.groupBy("src").agg(min("dst").as("m"))
-      val ss = ls.join(ssMin, Seq("src"))
-        .filter(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(ssMin.select(col("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-        .localCheckpoint()
-      cur = ss
-      val next = labelsOf(cur).localCheckpoint()
-      val nextStats = stats(cur, next)
-      converged = nextStats == prevStats
-      prevStats = nextStats
-      labels = next
-      iter += 1
-    }
     labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
   }
 

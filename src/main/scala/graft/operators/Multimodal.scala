@@ -206,12 +206,6 @@ object Multimodal {
     }
   }
 
-  /** Resize signature (stub): real impl rescales pixels; here it just
-    * re-tags metadata — the plumbing (column update, no payload copy on
-    * the Spark side) is what's exercised. */
-  def resize(media: DataFrame, w: Int, h: Int): DataFrame =
-    media.withColumn("width", lit(w)).withColumn("height", lit(h))
-
   /** Aspect-preserving fit-within-box resize metadata: no upscaling; the
     * binding side (decided in exact integer arithmetic: width binds iff
     * w·maxH ≥ h·maxW) maps to the box edge, the other side scales by the

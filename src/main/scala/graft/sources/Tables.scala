@@ -51,13 +51,11 @@ object Tables {
   // blocks), while a handful of genuinely scan-CPU-bound consumers win
   // big (timeseries_theil_sen 2.7→0.7 s, multimodal decode, cms hashing,
   // orders_basket_lift 2.6→2.0). So the fan-out is OPT-IN per call site
-  // via [[loadFanned]]; the auto-fan table list defaults to empty.
+  // via [[loadFanned]], the only route to it; [[load]] never fans.
   //
   // Knobs (session conf, runtime-settable):
   //   spark.graft.scan.fanout          = true|false   (default true —
-  //     master toggle, also disables the loadFanned force sites)
-  //   spark.graft.scan.fanout.tables   = csv of table names to auto-fan
-  //     on every load (default "" — opt-in call sites only)
+  //     master toggle for the loadFanned call sites)
   //   spark.graft.scan.fanout.minBytes = long         (default 256 KiB —
   //     below this the per-row CPU a shuffle could parallelize is smaller
   //     than the shuffle's own fixed cost)
@@ -68,8 +66,6 @@ object Tables {
     "events" -> "user_id",
     "documents" -> "doc_id",
     "embeddings" -> "vec_id")
-
-  private val defaultFanTables = ""
 
   /** Size + part-file count of a table path, resolved through Hadoop's
     * FileSystem API (ADVICE r15): java.io.File returns length 0 for any
@@ -93,18 +89,13 @@ object Tables {
 
   /** Fan a freshly-scanned table out to the session's parallelism when its
     * file layout cannot split to it naturally; a no-op at warehouse scale
-    * and for tables without a registered key. `force` bypasses the
-    * auto-fan table list (for [[loadFanned]] opt-in call sites) but never
-    * the scale gates. */
+    * and for tables without a registered key. */
   private def fanOut(spark: SparkSession, df: DataFrame, dir: String,
-                     name: String, force: Boolean = false): DataFrame = {
+                     name: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val listed = spark.conf
-      .get("spark.graft.scan.fanout.tables", defaultFanTables)
-      .split(",").map(_.trim).contains(name)
     fanKeys.get(name) match {
-      case Some(key) if (force || listed) &&
-          spark.conf.get("spark.graft.scan.fanout", "true").toBoolean =>
+      case Some(key)
+          if spark.conf.get("spark.graft.scan.fanout", "true").toBoolean =>
         val (bytes, nFiles) = totalBytesAndFiles(spark, path(dir, name))
         val minBytes = spark.conf
           .get("spark.graft.scan.fanout.minBytes", (256 * 1024).toString).toLong
@@ -120,14 +111,13 @@ object Tables {
     }
   }
 
-  /** [[load]] with the scan fan-out FORCED for this call site — for
-    * CPU-heavy consumers (pair builders, sketch hashing, per-row decode)
-    * of tables whose other consumers are shuffle-free broadcast-join/agg
-    * plans and therefore must not pay a blanket exchange. Subject to the
-    * same scale gates as the auto fan-out: a no-op once the file layout
-    * splits to the session's parallelism naturally. */
+  /** [[load]] with the scan fan-out for this call site — for CPU-heavy
+    * consumers (pair builders, sketch hashing, per-row decode) of tables
+    * whose other consumers are shuffle-free broadcast-join/agg plans and
+    * therefore must not pay a blanket exchange. A no-op once the file
+    * layout splits to the session's parallelism naturally. */
   def loadFanned(spark: SparkSession, dir: String, name: String): DataFrame =
-    fanOut(spark, load(spark, dir, name), dir, name, force = true)
+    fanOut(spark, load(spark, dir, name), dir, name)
 
   /** Canonical-type contract: `events.ts` always surfaces as
     * [[org.apache.spark.sql.types.TimestampType]], whatever physical parquet
@@ -152,7 +142,7 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val df = spark.read.parquet(path(dir, name))
-    val typed = if (name != "events") df
+    if (name != "events") df
     else df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) =>
         // integer division — `/` would go through double and lose precision
@@ -162,7 +152,6 @@ object Tables {
         df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-    fanOut(spark, typed, dir, name)
   }
 
   /** Register every table as a temp view so spark.sql(...) works too. */

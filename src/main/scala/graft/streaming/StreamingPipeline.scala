@@ -599,20 +599,15 @@ object StreamingPipeline {
   }
 
   /** Stage 2 parity — the CTAS aggregation over the enriched stream
-    * (A1–A3). `exact=true` keeps ksqlDB's exact COUNT_DISTINCT via a
-    * collect_set (bounded real-world cardinality per category); at
-    * 100 TB scale pass exact=false for an HLL sketch with bounded state
-    * (documented deviation, SURVEY.md §7.3). */
-  def hotelsCount(enriched: DataFrame, exact: Boolean = true): DataFrame = {
-    val distinctAgg =
-      if (exact) size(collect_set(col("hotel_id"))).cast("long")
-      else approx_count_distinct(col("hotel_id"))
+    * (A1–A3). Keeps ksqlDB's exact COUNT_DISTINCT via a collect_set
+    * (bounded real-world cardinality per category); for bounded state at
+    * high cardinality use [[hotelsCountBounded]] (SURVEY.md §7.3). */
+  def hotelsCount(enriched: DataFrame): DataFrame =
     enriched
       .groupBy(col("stay_category"))
       .agg(
         count(col("hotel_id")).as("hotels_amount"),
-        distinctAgg.as("distinct_hotels"))
-  }
+        size(collect_set(col("hotel_id"))).cast("long").as("distinct_hotels"))
 
   /** The 100 TB answer (SURVEY.md §7.3): per-group state is an exact set
     * only while the group is small, an HLL sketch after — so the common
@@ -715,16 +710,15 @@ object StreamingPipeline {
 
   /** Wire a streaming source through enrich → hotels_count and emit the
     * changelog (K2/K3 parity: outputMode("update") ≙ EMIT CHANGES). */
-  def changelogWriter(records: DataFrame, exact: Boolean = true): DataStreamWriter[Row] =
-    hotelsCount(enrich(records), exact)
+  def changelogWriter(records: DataFrame): DataStreamWriter[Row] =
+    hotelsCount(enrich(records))
       .writeStream
       .outputMode(OutputMode.Update())
 
   /** Run the full pipeline onto an in-memory table (K3 push-query parity:
     * clients read `SELECT * FROM <name>`). */
-  def startMemoryChangelog(records: DataFrame, name: String,
-                           exact: Boolean = true): StreamingQuery =
-    changelogWriter(records, exact)
+  def startMemoryChangelog(records: DataFrame, name: String): StreamingQuery =
+    changelogWriter(records)
       .format("memory")
       .queryName(name)
       .start()

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{lit, raise_error}
 
 /** The worst-5 ↔ fixture-ledger cross-check must be MECHANICAL
   * (VERDICT r12 #4): `graph_kcore` rotated into the final-tree worst-5
@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * code-audit. Bench now extracts the ledger's fixture names from
   * PLANS.md and reports any worst-5 member without a row in the
   * artifact's `worst5_unledgered` field; this spec pins the extraction
-  * against the real PLANS.md and red-demos a fake rotation. */
-class BenchLedgerSpec extends AnyFunSuite {
+  * against the real PLANS.md and red-demos a fake rotation. It also pins
+  * that `runToCompletion`, the one way every main times a query,
+  * evaluates the whole result rather than a pruned `.count()`. */
+class BenchLedgerSpec extends SparkSpec {
 
   private lazy val plans = new String(java.nio.file.Files.readAllBytes(
     java.nio.file.Paths.get("PLANS.md")), "UTF-8")
@@ -53,5 +55,15 @@ class BenchLedgerSpec extends AnyFunSuite {
         |""".stripMargin
     assert(Bench.ledgerFixtures(fake) == Set("fixture_a", "fixture_b"))
     assert(Bench.ledgerFixtures("# no ledger heading\n| `x` |") == Set.empty)
+  }
+
+  test("runToCompletion evaluates every output column, unlike .count()") {
+    // .count() reads no column, so Catalyst prunes the projection and the
+    // failing expression never runs; the noop sink must evaluate it
+    val df = spark.range(3).select(raise_error(lit("graft-boom")).as("x"))
+    val e = intercept[Exception](Bench.runToCompletion(df))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("graft-boom")), e.toString)
   }
 }

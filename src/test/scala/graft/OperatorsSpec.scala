@@ -1017,34 +1017,6 @@ class OperatorsSpec extends SparkSpec {
     assert(survivors == Set(1L, 4L), s"$survivors")
   }
 
-  test("connectedComponentsStar: agrees with label propagation on chains, stars, cliques") {
-    // chain (worst case for propagation), two components, clique, and a
-    // long path — both algorithms must produce identical labelings
-    val fixtures = Seq(
-      Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 4L)),
-      Seq((5L, 1L), (5L, 2L), (5L, 3L)),                      // star, center not min
-      Seq((1L, 2L), (1L, 3L), (2L, 3L), (7L, 8L)),            // clique + edge
-      (1L to 9L).map(i => (i, i + 1L)),                       // path 1..10
-      Seq((4L, 9L), (9L, 2L), (2L, 7L), (7L, 11L), (11L, 3L)) // zig-zag ids
-    )
-    for (fx <- fixtures) {
-      val pairs = fx.toDF("id_a", "id_b")
-      val viaProp = Dedup.connectedComponents(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaStar = Dedup.connectedComponentsStar(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaStar == viaProp, s"fixture $fx: star=$viaStar prop=$viaProp")
-    }
-  }
-
-  test("connectedComponentsStar: empty edge list yields empty labeling") {
-    import org.apache.spark.sql.types._
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType))))
-    assert(Dedup.connectedComponentsStar(empty).count() == 0)
-  }
-
   test("ngramJaccardPairs: exact dups score 1.0, disjoint docs absent") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon"),

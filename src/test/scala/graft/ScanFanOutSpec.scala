@@ -3,15 +3,15 @@ package graft
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
-/** Locks the r15 scan fan-out gate (Tables.load/loadFanned → fanOut): the
+/** Locks the r15 scan fan-out gate (Tables.loadFanned → fanOut): the
   * driver testdata is one single-row-group parquet file per table, so a
   * scan-CPU-bound query runs its map side on one core; opt-in call sites
   * (SparkEntry.tF) redistribute rows by the table's key — but ONLY when
   * the file layout cannot split to the session's parallelism naturally,
   * so the exchange provably disappears at warehouse scale (files ≥
-  * cores × maxPartitionBytes). The auto-fan table list defaults to empty:
-  * an interleaved A/B showed a blanket fan-out regresses more queries
-  * than it helps (Tables.scala rationale). */
+  * cores × maxPartitionBytes). Plain load() never fans: an interleaved
+  * A/B showed a blanket fan-out regresses more queries than it helps
+  * (Tables.scala rationale). */
 class ScanFanOutSpec extends SparkSpec {
 
   private def withConf[A](pairs: (String, String)*)(body: => A): A = {
@@ -63,15 +63,6 @@ class ScanFanOutSpec extends SparkSpec {
       val p2 = Tables.loadFanned(spark, sfDir, "lineitem")
         .queryExecution.executedPlan.toString
       assert(!p2.contains("hashpartitioning(l_orderkey"), p2)
-    }
-  }
-
-  test("auto-fan table list is honored by load()") {
-    withConf("spark.graft.scan.fanout.minBytes" -> "0",
-             "spark.graft.scan.fanout.tables" -> "lineitem") {
-      val plan = Tables.load(spark, sfDir, "lineitem")
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("hashpartitioning(l_orderkey"), plan)
     }
   }
 

@@ -117,9 +117,9 @@ class StreamingPerfGateSpec extends SparkSpec {
     assert(addDelta <= 100,
       s"addBatch exceeds the paired in-run floor by a median ${addDelta}ms, " +
         "more than 100ms — per-batch work in the changelog path regressed " +
-        "(compare Bench streaming_detail); each floor batch shares its " +
-        "paired target batch's host phase and state-fsync/WAL costs, so " +
-        "host speed is not an excuse")
+        "(compare perfbench --trace 1 streaming.microbatch.addbatch_ms_p50); " +
+        "each floor batch shares its paired target batch's host phase and " +
+        "state-fsync/WAL costs, so host speed is not an excuse")
     assert(commitDelta <= 60,
       s"commit exceeds the paired in-run floor by a median ${commitDelta}ms, " +
         "more than 60ms — offset-log/WAL commit path regressed")
