@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.Enrich
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Bridge, DecodeJsonPayload}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -521,16 +522,27 @@ object StreamingPipeline {
     * schema-on-read semantics, the reference's
     * ci_cd/ksql/create_stream.json:2).
     *
+    * The parse is `DecodeJsonPayload`: `from_json`'s parser, fed each
+    * payload as a `String` rather than through a per-row
+    * `InputStreamReader`. Binary payloads (Kafka's `value`) are cast to
+    * string and decoded as UTF-8 with replacement, exactly as `from_json`
+    * decodes them; Jackson's byte-array parser is not used because it
+    * detects the encoding itself and so reads invalid UTF-8, a BOM or
+    * UTF-16 bytes differently. The optimizer rule `PruneJsonPayloadFields`
+    * then narrows the parse to the fields the query reads: the reference
+    * changelog parses `srch_ci`, `srch_co` and `hotel_id` only.
+    *
     * The parse sits in a one-element `explode` because Catalyst's
-    * PushDownPredicates would otherwise copy `from_json` into the null
-    * filter below the projection and parse every payload twice; a filter
-    * on a generator's output cannot be pushed below the `Generate`. */
+    * PushDownPredicates would otherwise copy it into the null filter
+    * below the projection and parse every payload twice; a filter on a
+    * generator's output cannot be pushed below the `Generate`. */
   def fromJsonPayload(raw: DataFrame, payloadCol: String = "value",
                       schema: StructType = expediaSchema): DataFrame =
     raw
       .filter(col(payloadCol).isNotNull)
       .select(explode(array(
-        from_json(col(payloadCol).cast("string"), schema))).as("r"))
+        Bridge.column(DecodeJsonPayload(
+          Bridge.expression(col(payloadCol).cast("string")), schema)))).as("r"))
       .filter(col("r").isNotNull)
       .select("r.*")
 

@@ -72,7 +72,8 @@ class StreamingSpec extends SparkSpec {
         """{"id":2,"hotel_id":200,"srch_ci":"2020-01-01","srch_co":"2020-01-20"}""")
       q.processAllAvailable()
       val out = spark.table("ext_topic").as[String].collect().sorted
-      // malformed row: from_json yields a struct of null fields → id null
+      // malformed row: the decode yields a struct of null fields, as
+      // from_json does → id null
       assert(out.length == 3)
       val cats = out.map(s =>
         "\"stay_category\":\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1)))
@@ -80,42 +81,176 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("fromJsonPayload: one parse per payload, same rows as the two-parse form") {
-    val payloads: Seq[String] = Seq(null, "", "   ", "\t\n", "null",
-      "not json", """{"id":1,"hotel_id":10,"srch_ci":"2020-""",
-      """[{"id":2,"hotel_id":20}]""", "[]", "{}",
+  /** Wire payloads as Kafka delivers them: binary `value`s, null
+    * included. Edge cases of the bytes, the text and the JSON, several of
+    * them inside a field the changelog reads (srch_ci, srch_co, hotel_id)
+    * and again inside one it does not. */
+  private val wirePayloads: Seq[Option[Array[Byte]]] = {
+    import java.nio.charset.StandardCharsets.{UTF_16, UTF_16LE, UTF_8}
+    def b(bytes: Int*): Array[Byte] = bytes.map(_.toByte).toArray
+    val full = """{"id":1,"date_time":"2015-08-18 12:37:10","site_name":2,""" +
+      """"posa_container":3,"user_location_country":66,"user_location_region":348,""" +
+      """"user_location_city":48862,"orig_destination_distance":2234.2641,""" +
+      """"user_id":12,"is_mobile":0,"is_package":1,"channel":9,""" +
+      """"srch_ci":"2017-08-01","srch_co":"2017-08-05","srch_adults_cnt":2,""" +
+      """"srch_children_cnt":0,"srch_rm_cnt":1,"srch_destination_id":8250,""" +
+      """"srch_destination_type_id":1,"hotel_id":2336462864384}"""
+    val text = Seq(
+      "", "   ", "\t\n", "null", "not json", "42", "\"str\"",
+      """{"id":1,"hotel_id":10,"srch_ci":"2020-""",
+      """[{"id":2,"hotel_id":20}]""", "[]", "{}", full,
       """{"id":"three","hotel_id":30}""",
-      """{"id":4,"hotel_id":40,"extra":"x"}""")
-    // file-backed on purpose: a LocalRelation is folded at optimization
-    // time and its plan would show no parse at all
+      """{"id":4,"hotel_id":40,"extra":"x"}""",
+      // non-ASCII text and unicode escapes, in read and unread fields
+      "{\"id\":10,\"date_time\":\"Zürich 東京 😀\",\"srch_ci\":\"2020\\u002d01\\u002d01\"," +
+        "\"srch_co\":\"2020-01-05\",\"hotel_id\":100,\"x\":\"\\u00e9\\ud83d\\ude00\"}",
+      // type mismatch in an unread field, and in a read one
+      """{"id":11,"site_name":"abc","srch_ci":"2020-01-01","srch_co":"2020-01-02","hotel_id":110}""",
+      """{"id":12,"srch_ci":7,"srch_co":"2020-01-02","hotel_id":"120"}""",
+      """{"hotel_id":true,"is_mobile":[1]}""",
+      // duplicate keys
+      """{"id":13,"hotel_id":130,"hotel_id":131,"srch_ci":"2020-01-01","srch_ci":"2020-02-01","srch_co":"2020-02-03"}""",
+      // 1e3 and 1.0 for a LONG
+      """{"id":14,"hotel_id":1e3,"srch_ci":"2020-01-01","srch_co":"2020-01-02"}""",
+      """{"id":15,"hotel_id":1.0,"user_id":2e1}""",
+      // overflow in a read LONG, an unread LONG and an unread INT
+      """{"id":16,"hotel_id":99999999999999999999}""",
+      """{"id":99999999999999999999,"site_name":99999999999,"hotel_id":170}""",
+      // syntax error before and after hotel_id
+      """{"id":18,"srch_ci":"2020-01-01" "hotel_id":180}""",
+      """{"id":19,"hotel_id":190,"srch_co":}""",
+      """{"id":20,"hotel_id":200,"date_time":"x""",
+      // trailing garbage
+      """{"id":21,"hotel_id":210} xyz""",
+      """{"id":22,"hotel_id":220}}""",
+      """{"id":23,"hotel_id":230}{"id":24,"hotel_id":240}""",
+      // control characters: raw in an unread and in a read string, escaped
+      "{\"id\":25,\"date_time\":\"a\tb\",\"hotel_id\":250}",
+      "{\"id\":26,\"srch_ci\":\"2020\n01\",\"hotel_id\":260}",
+      "{\"id\":27,\"date_time\":\"a\\tb\\u0001\",\"hotel_id\":270}",
+      // an escape JSON does not define, in an unread string
+      """{"id":31,"date_time":"a\qb","hotel_id":310}""",
+      // nested values in unread fields, case-mismatched names
+      """{"id":28,"extra":{"a":[1,2,{"b":null}]},"hotel_id":280}""",
+      """{"HOTEL_ID":29,"Srch_ci":"2020-01-01"}""",
+      // whitespace around the object
+      " \n {\"id\":30,\"hotel_id\":300} \r\n")
+      .map(_.getBytes(UTF_8))
+    val bytes = Seq(
+      // invalid UTF-8 inside a read field, and inside an unread one
+      """{"id":40,"srch_ci":"2020-01-0""".getBytes(UTF_8) ++ b(0xff) ++
+        """","srch_co":"2020-01-03","hotel_id":400}""".getBytes(UTF_8),
+      """{"id":41,"date_time":"""".getBytes(UTF_8) ++ b(0xc3, 0x28, 0xe2, 0x82) ++
+        """","srch_ci":"2020-01-01","srch_co":"2020-01-03","hotel_id":410}""".getBytes(UTF_8),
+      // a UTF-8 BOM, a leading NUL
+      b(0xef, 0xbb, 0xbf) ++ """{"id":42,"hotel_id":420}""".getBytes(UTF_8),
+      b(0x00) ++ """{"id":43,"hotel_id":430}""".getBytes(UTF_8),
+      // UTF-16 without and with a BOM
+      """{"id":44,"hotel_id":440}""".getBytes(UTF_16LE),
+      """{"id":45,"hotel_id":450}""".getBytes(UTF_16))
+    None +: (text ++ bytes).map(Some(_))
+  }
+
+  /** Jackson's whitespace; a payload of only these decodes to no record. */
+  private def blank(p: Array[Byte]): Boolean =
+    new String(p, java.nio.charset.StandardCharsets.UTF_8)
+      .forall(c => c == ' ' || c == '\t' || c == '\n' || c == '\r')
+
+  /** The payloads as a file-backed binary `value` column. File-backed on
+    * purpose: a LocalRelation is folded at optimization time and its plan
+    * would show no parse at all. */
+  private def stagedPayloads(): org.apache.spark.sql.DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_decode")
       .resolve("payloads").toString
-    payloads.toDF("value").coalesce(1).write.parquet(dir)
-    val raw = spark.read.parquet(dir)
+    wirePayloads.toDF("value").coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** The built-in reference: the former two-parse form, whose null filter
+    * on the parsed struct Catalyst pushes below the projection as a
+    * second `from_json`. */
+  private def fromJsonReference(raw: org.apache.spark.sql.DataFrame) = raw
+    .filter(col("value").isNotNull)
+    .select(from_json(col("value").cast("string"),
+      StreamingPipeline.expediaSchema).as("r"))
+    .filter(col("r").isNotNull)
+    .select("r.*")
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Fields parsed by each engine decode in the optimized plan. */
+  private def decodedFields(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case d: org.apache.spark.sql.graft.DecodeJsonPayload => d.schema.fieldNames.toSeq
+    }))
+
+  test("fromJsonPayload: one parse per payload, same rows as the two-parse form") {
+    val raw = stagedPayloads()
+    assert(raw.schema("value").dataType == org.apache.spark.sql.types.BinaryType)
     val once = StreamingPipeline.fromJsonPayload(raw)
-    // reference: the former form, whose null filter on the parsed struct
-    // Catalyst pushes below the projection as a second from_json
-    val twice = raw
-      .filter(col("value").isNotNull)
-      .select(from_json(col("value").cast("string"),
-        StreamingPipeline.expediaSchema).as("r"))
-      .filter(col("r").isNotNull)
-      .select("r.*")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val twice = fromJsonReference(raw)
     assert(once.schema == twice.schema)
     assert(once.columns.length == 20)
-    assert(rows(once) == rows(twice))
-    assert(rows(once).size <= payloads.size - 4,
+    assert(sortedRows(once) == sortedRows(twice))
+    val payloads = wirePayloads.flatten
+    assert(sortedRows(once).size == payloads.count(p => !blank(p)),
       "null, empty and whitespace-only payloads must be dropped")
-    def parses(df: org.apache.spark.sql.DataFrame): Int =
+    def jsonToStructs(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case p =>
         p.expressions.map(_.collect {
           case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
         }.size).sum
       }.sum
-    assert(parses(twice) == 2)
-    assert(parses(once) == 1, once.queryExecution.optimizedPlan.toString)
+    assert(jsonToStructs(twice) == 2)
+    assert(jsonToStructs(once) == 0, once.queryExecution.optimizedPlan.toString)
+    assert(decodedFields(once).size == 1, once.queryExecution.optimizedPlan.toString)
+  }
+
+  test("fromJsonPayload: the optimizer parses only the fields a query reads") {
+    val raw = stagedPayloads()
+    val ref = fromJsonReference(raw)
+    val read = Seq("srch_ci", "srch_co", "hotel_id")
+    val changelog = StreamingPipeline.hotelsCount(
+      StreamingPipeline.enrich(StreamingPipeline.fromJsonPayload(raw)))
+    val plan = changelog.queryExecution.optimizedPlan.toString
+    assert(decodedFields(changelog) == Seq(read), plan)
+    assert(decodedFields(StreamingPipeline.fromJsonPayload(raw)) ==
+      Seq(StreamingPipeline.expediaSchema.fieldNames.toSeq))
+    // a filter alone still returns all 20 columns, so nothing is dropped;
+    // projecting after it keeps the filtered field and the projected one
+    val filtered = StreamingPipeline.fromJsonPayload(raw).filter(col("hotel_id") > 0)
+    assert(decodedFields(filtered).map(_.size) == Seq(20))
+    assert(sortedRows(filtered) == sortedRows(ref.filter(col("hotel_id") > 0)))
+    val projected = filtered.select("srch_ci")
+    assert(decodedFields(projected) == Seq(Seq("srch_ci", "hotel_id")))
+    assert(sortedRows(projected) ==
+      sortedRows(ref.filter(col("hotel_id") > 0).select("srch_ci")))
+    assert(StreamingPipeline.fromJsonPayload(raw).count() ==
+      wirePayloads.flatten.count(p => !blank(p)))
+    assert(StreamingPipeline.fromJsonPayload(raw).count() == ref.count())
+
+    // pruned against unpruned: the engine without the rule, and from_json
+    val pruned3 = StreamingPipeline.fromJsonPayload(raw).select(read.map(col): _*)
+    val pruned = (sortedRows(pruned3), sortedRows(changelog))
+    assert(decodedFields(pruned3) == Seq(read))
+    val rule = org.apache.spark.sql.graft.PruneJsonPayloadFields.ruleName
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, rule)
+    try {
+      val whole3 = StreamingPipeline.fromJsonPayload(raw).select(read.map(col): _*)
+      val wholeLog = StreamingPipeline.hotelsCount(
+        StreamingPipeline.enrich(StreamingPipeline.fromJsonPayload(raw)))
+      assert(decodedFields(whole3).map(_.size) == Seq(20))
+      assert(decodedFields(wholeLog).map(_.size) == Seq(20))
+      assert(pruned == ((sortedRows(whole3), sortedRows(wholeLog))))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(pruned == ((sortedRows(ref.select(read.map(col): _*)),
+      sortedRows(StreamingPipeline.hotelsCount(StreamingPipeline.enrich(ref))))))
   }
 
   test("flatMapGroupsWithState: custom per-key state across batches") {
