@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.StreamingPipeline
+import graft.streaming.{StreamingExtensions, StreamingPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -85,7 +85,7 @@ class StreamingRecoverySpec extends SparkSpec {
   test("streaming dedup drops repeats across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Booking]
-    val q = StreamingPipeline.dedupStream(input.toDF(), Seq("hotel_id"))
+    val q = StreamingExtensions.dedupStream(input.toDF(), Seq("hotel_id"))
       .writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append").start()
     try {
@@ -108,7 +108,7 @@ class StreamingRecoverySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = StreamingPipeline.dedupStream(
+    val q = StreamingExtensions.dedupStream(
         input.toDF().toDF("k", "ts"), Seq("k"),
         eventTimeCol = Some("ts"), watermarkDelay = "1 hour")
       .writeStream.format("memory").queryName("dedup_wm")
@@ -156,7 +156,7 @@ class StreamingRecoverySpec extends SparkSpec {
       writeFile(10000L until 20000L)                              // all dup
 
       val schema = Seq((0L, "x")).toDF("doc_id", "payload").schema
-      def startQuery(outDir: String, ckpt: String) = StreamingPipeline
+      def startQuery(outDir: String, ckpt: String) = StreamingExtensions
         .dedupStream(
           spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
             .parquet(inDir),
@@ -234,45 +234,6 @@ class StreamingRecoverySpec extends SparkSpec {
       == Seq("Short stay"))
   }
 
-  test("stream-stream interval join: buffered side survives a checkpointed restart") {
-    val base = Files.createTempDirectory("graft_ssj_recovery").toString
-    val impDir = s"$base/imps"; val clkDir = s"$base/clicks"
-    val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
-    new java.io.File(impDir).mkdirs(); new java.io.File(clkDir).mkdirs()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val impSchema = Seq((0L, ts("2024-01-01 00:00:00"))).toDF("user_id", "imp_ts").schema
-    val clkSchema = Seq((0L, ts("2024-01-01 00:00:00"))).toDF("user_id", "click_ts").schema
-
-    def startQuery() = StreamingPipeline.streamStreamIntervalJoin(
-      spark.readStream.schema(impSchema).parquet(impDir),
-      spark.readStream.schema(clkSchema).parquet(clkDir),
-      keyCol = "user_id", leftTsCol = "imp_ts", rightTsCol = "click_ts",
-      delay = "10 minutes", maxGap = "30 minutes")
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-
-    // phase 1: only the impression arrives — it must be BUFFERED in the
-    // join state store, nothing emitted
-    Seq((1L, ts("2024-01-01 10:00:00"))).toDF("user_id", "imp_ts")
-      .coalesce(1).write.mode("append").parquet(impDir)
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-
-    // phase 2: RESTART from the checkpoint, then the matching click (and a
-    // keyless control) arrive — the match only exists if the buffered
-    // impression was restored from state
-    Seq((1L, ts("2024-01-01 10:05:00")), (2L, ts("2024-01-01 10:06:00")))
-      .toDF("user_id", "click_ts")
-      .coalesce(1).write.mode("append").parquet(clkDir)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
-
-    val out = spark.read.parquet(outDir)
-      .collect().map(r => (r.getLong(0), r.getTimestamp(2).toString)).toSet
-    assert(out === Set((1L, "2024-01-01 10:05:00.0")))
-  }
-
   test("stream-stream as-of join: buffered lefts and quote history survive restart") {
     import graft.streaming.{QuoteEvent, UserEvent}
     spark.conf.set(GraftSession.StateStoreProviderConf, GraftSession.RocksDbProvider)
@@ -285,7 +246,7 @@ class StreamingRecoverySpec extends SparkSpec {
       val lSchema = Seq(UserEvent(0L, ts("2024-01-01 00:00:00"), 0.0)).toDS().schema
       val rSchema = Seq(QuoteEvent(0L, ts("2024-01-01 00:00:00"), 0.0)).toDS().schema
 
-      def startQuery() = StreamingPipeline.asofBackwardStream(
+      def startQuery() = StreamingExtensions.asofBackwardStream(
           spark.readStream.schema(lSchema).parquet(lDir).as[UserEvent],
           spark.readStream.schema(rSchema).parquet(rDir).as[QuoteEvent],
           delay = "1 hour")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingPipeline
+import graft.streaming.{StreamingExtensions, StreamingPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -54,6 +54,17 @@ class StreamingSpec extends SparkSpec {
         .distinct().as[String].collect().toSet
         .subsetOf(graft.functions.StayCategory.domain.toSet))
     } finally query.stop()
+  }
+
+  test("StreamingPipeline's public defs are exactly the reference topology and its helpers") {
+    // extension operators belong in StreamingExtensions; the reflection
+    // skips compiler-made lambdas (synthetic) and default-argument getters
+    val defs = StreamingPipeline.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) && !m.isSynthetic)
+      .map(_.getName).filterNot(_.contains("$default$")).toSet
+    assert(defs === Set("expediaSchema", "fromJsonPayload", "enrich", "toJsonPayload",
+      "hotelsCount", "hotelsCountBounded", "changelogWriter", "startMemoryChangelog",
+      "materializeChangelog", "readMaterialized"))
   }
 
   test("json payload roundtrip (Kafka wire parity, S2/S3/K1)") {
@@ -253,29 +264,6 @@ class StreamingSpec extends SparkSpec {
       sortedRows(StreamingPipeline.hotelsCount(StreamingPipeline.enrich(ref))))))
   }
 
-  test("flatMapGroupsWithState: custom per-key state across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.{UserEvent, UserTotalsUpdate}
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val input = MemoryStream[UserEvent]
-    val q = StreamingPipeline.runningUserTotals(input.toDS())
-      .writeStream.format("memory").queryName("user_totals")
-      .outputMode("update").start()
-    try {
-      input.addData(
-        UserEvent(1L, ts("2024-01-01 10:00:00"), 10.0),
-        UserEvent(1L, ts("2024-01-01 10:01:00"), 5.0),
-        UserEvent(2L, ts("2024-01-01 10:02:00"), 7.0))
-      q.processAllAvailable()
-      input.addData(UserEvent(1L, ts("2024-01-01 11:00:00"), 1.0))
-      q.processAllAvailable()
-      val m = spark.table("user_totals").as[UserTotalsUpdate].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
-      assert(m(1L).n_events == 3L && math.abs(m(1L).total_value - 16.0) < 1e-9)
-      assert(m(2L).n_events == 1L && math.abs(m(2L).total_value - 7.0) < 1e-9)
-    } finally q.stop()
-  }
-
   test("topKStream: streaming probes against a broadcast index match batch brute force") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
@@ -448,7 +436,7 @@ class StreamingSpec extends SparkSpec {
     try {
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
       val input = MemoryStream[UserEvent]
-      val q = StreamingPipeline.runningUserTotalsTws(input.toDS())
+      val q = StreamingExtensions.runningUserTotals(input.toDS())
         .writeStream.format("memory").queryName("tws_totals")
         .outputMode("update").start()
       try {
@@ -468,63 +456,29 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.unset(GraftSession.StateStoreProviderConf)
   }
 
-  test("left-outer interval join: non-converting impression emits null-padded after watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val imps = MemoryStream[(Long, java.sql.Timestamp)]
-    val clks = MemoryStream[(Long, java.sql.Timestamp)]
-    val joined = StreamingPipeline.streamStreamLeftOuterJoin(
-      imps.toDF().toDF("user_id", "imp_ts"),
-      clks.toDF().toDF("user_id", "click_ts"),
-      keyCol = "user_id", leftTsCol = "imp_ts", rightTsCol = "click_ts",
-      delay = "10 minutes", maxGap = "30 minutes")
-    val q = joined.writeStream.format("memory").queryName("louter")
-      .outputMode("append").start()
-    try {
-      // user 1 converts inside the gap; user 2 never does
-      imps.addData((1L, ts("2024-01-01 10:00:00")), (2L, ts("2024-01-01 10:00:00")))
-      clks.addData((1L, ts("2024-01-01 10:10:00")))
-      q.processAllAvailable()
-      // push the GLOBAL watermark (min over both inputs) far past
-      // imp_ts + maxGap; the null-padded row emits in a FOLLOWING batch,
-      // so trigger twice
-      imps.addData((98L, ts("2024-01-01 13:00:00")))
-      clks.addData((99L, ts("2024-01-01 13:00:00")))
-      q.processAllAvailable()
-      imps.addData((98L, ts("2024-01-01 13:30:00")))
-      clks.addData((99L, ts("2024-01-01 13:30:00")))
-      q.processAllAvailable()
-      val rows = spark.table("louter")
-        .select("user_id", "click_ts").collect()
-        .map(r => (r.getLong(0), Option(r.getTimestamp(1)).map(_.toString)))
-        .toSet
-      assert(rows.contains((1L, Some("2024-01-01 10:10:00.0"))),
-        s"converted impression missing: $rows")
-      assert(rows.contains((2L, None)),
-        s"null-padded non-conversion missing: $rows")
-    } finally q.stop()
-  }
-
   test("watermark observability: late rows are dropped AND counted in progress metrics") {
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = input.toDF().toDF("ts", "event_type", "value")
-    val agg = StreamingPipeline.windowedEventCounts(df, "ts", "10 minutes", "1 hour")
-    val q = agg.writeStream.format("memory").queryName("wm_obs")
+    import graft.streaming.UserEvent
+    val input = MemoryStream[UserEvent]
+    // update mode emits a window as soon as a row lands in it, so a late
+    // row that slipped past the watermark would surface at once
+    val q = StreamingExtensions.trendingStream(
+        input.toDS(), "1 hour", delay = "10 minutes")
+      .writeStream.format("memory").queryName("wm_obs")
       .outputMode("update").start()
     try {
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      input.addData((ts("2024-01-01 10:00:00"), "click", 1.0),
-        (ts("2024-01-01 11:00:00"), "click", 1.0))
+      input.addData(UserEvent(1L, ts("2024-01-01 10:00:00"), 1.0),
+        UserEvent(1L, ts("2024-01-01 11:00:00"), 1.0))
       q.processAllAvailable() // watermark now 10:50
-      input.addData((ts("2024-01-01 09:00:00"), "late", 1.0))
+      input.addData(UserEvent(2L, ts("2024-01-01 09:00:00"), 1.0))
       q.processAllAvailable()
       val dropped = q.recentProgress.flatMap(_.stateOperators)
         .map(_.numRowsDroppedByWatermark).sum
       assert(dropped >= 1, s"late row not counted as dropped (dropped=$dropped)")
-      // and the late row must not have produced a 'late' window
+      // and the late row must not have produced a window of its own
       assert(spark.table("wm_obs")
-        .filter(col("event_type") === "late").count() == 0)
+        .filter(col("win_start") === lit(ts("2024-01-01 09:00:00"))).count() == 0)
     } finally q.stop()
   }
 
@@ -564,7 +518,7 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(s"$base/epoch=seed")
     val input = MemoryStream[(Long, String)]
     var survivorSets = Map.empty[Long, Set[Long]]
-    val q = StreamingPipeline.dedupStreamGrowingCorpus(
+    val q = StreamingExtensions.dedupStreamGrowingCorpus(
       input.toDF().toDF("doc_id", "text"), base, "doc_id", "text",
       sink = (df, epoch) => survivorSets +=
         epoch -> df.select("doc_id").collect().map(_.getLong(0)).toSet)
@@ -593,7 +547,7 @@ class StreamingSpec extends SparkSpec {
     Seq((1L, textA)).toDF("doc_id", "text").write.parquet(s"$base/epoch=seed")
     val batch = Seq((11L, textC)).toDF("doc_id", "text")
     var out = Set.empty[Long]
-    def run(): Unit = StreamingPipeline.growCorpusBatch(batch, base, 7L,
+    def run(): Unit = StreamingExtensions.growCorpusBatch(batch, base, 7L,
       "doc_id", "text",
       (df, _) => out = df.select("doc_id").collect().map(_.getLong(0)).toSet,
       3, 16, 4, 0.8)
@@ -701,7 +655,7 @@ class StreamingSpec extends SparkSpec {
       // micro-batches to evaluate expiry — processAllAvailable never sees
       // an idle stream, so the test polls the sink (with a throttling
       // trigger so the empty batches don't spin the checkpoint dir).
-      val q = StreamingPipeline.runningUserTotalsTtl(input.toDS(), ttlMs = 8000L)
+      val q = StreamingExtensions.runningUserTotals(input.toDS(), ttlMs = 8000L)
         .writeStream.format("memory").queryName("ttl_totals")
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
         .outputMode("update").start()
@@ -726,169 +680,6 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.unset(GraftSession.StateStoreProviderConf)
   }
 
-  test("windowed event counts with watermark (T4 extension)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = input.toDF().toDF("ts", "event_type", "value")
-    val agg = StreamingPipeline.windowedEventCounts(df, "ts", "10 minutes", "1 hour")
-    val q = agg.writeStream.format("memory").queryName("win_counts")
-      .outputMode("update").start()
-    try {
-      def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      input.addData(
-        (ts("2024-01-01 10:05:00"), "click", 1.0),
-        (ts("2024-01-01 10:45:00"), "click", 2.0),
-        (ts("2024-01-01 11:05:00"), "view", 5.0))
-      q.processAllAvailable()
-      val rows = spark.table("win_counts")
-        .groupBy("window_start", "event_type").agg(max("n").as("n"))
-        .collect().map(r => (r.getTimestamp(0).toString, r.getString(1)) -> r.getLong(2)).toMap
-      assert(rows(("2024-01-01 10:00:00.0", "click")) == 2L)
-      assert(rows(("2024-01-01 11:00:00.0", "view")) == 1L)
-    } finally q.stop()
-  }
-
-  test("transformWithState timers: session summaries emitted on watermark expiry") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.{SessionSummary, UserEvent}
-    spark.conf.set(GraftSession.StateStoreProviderConf, GraftSession.RocksDbProvider)
-    try {
-      def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      val input = MemoryStream[UserEvent]
-      val q = StreamingPipeline.sessionSummaries(input.toDS(), gapMs = 600000L)
-        .writeStream.format("memory").queryName("tws_sessions")
-        .outputMode("append").start()
-      try {
-        input.addData(
-          UserEvent(1L, ts("2024-01-01 10:00:00"), 1.0),
-          UserEvent(1L, ts("2024-01-01 10:05:00"), 2.0),
-          UserEvent(2L, ts("2024-01-01 10:01:00"), 7.0))
-        q.processAllAvailable()
-        // advance the watermark far past both sessions' (last + gap) timers
-        input.addData(UserEvent(99L, ts("2024-01-01 12:00:00"), 0.0))
-        q.processAllAvailable()
-        input.addData(UserEvent(99L, ts("2024-01-01 12:00:01"), 0.0))
-        q.processAllAvailable()
-        val out = spark.table("tws_sessions").as[SessionSummary].collect()
-          .filter(_.user_id < 90).map(s => (s.user_id, s.n_events, s.total_value)).toSet
-        assert(out === Set((1L, 2L, 3.0), (2L, 1L, 7.0)))
-      } finally q.stop()
-    } finally spark.conf.unset(GraftSession.StateStoreProviderConf)
-  }
-
-  test("session windows: gap-merged, finalized by watermark, state dropped") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = input.toDF().toDF("ts", "event_type", "value")
-    val agg = StreamingPipeline.sessionWindowedCounts(
-      df, "ts", delay = "10 minutes", gap = "30 minutes")
-    val q = agg.writeStream.format("memory").queryName("sess_counts")
-      .outputMode("append").start()
-    try {
-      def ts(s: String) = java.sql.Timestamp.valueOf(s)
-      // two events 10 min apart (one session), a third 80 min later (new
-      // session); then sentinels push the watermark past both session ends
-      input.addData(
-        (ts("2024-01-01 10:00:00"), "click", 1.0),
-        (ts("2024-01-01 10:10:00"), "click", 2.0),
-        (ts("2024-01-01 11:30:00"), "click", 4.0))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-01 13:00:00"), "zz", 0.0))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-01 13:01:00"), "zz", 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("sess_counts")
-        .filter(col("event_type") === "click")
-        .collect()
-        .map(r => (r.getTimestamp(0).toString, r.getTimestamp(1).toString,
-          r.getLong(3), r.getDouble(4)))
-        .toSet
-      // session end = last event + gap; both sessions closed by watermark
-      assert(rows === Set(
-        ("2024-01-01 10:00:00.0", "2024-01-01 10:40:00.0", 2L, 3.0),
-        ("2024-01-01 11:30:00.0", "2024-01-01 12:00:00.0", 1L, 4.0)))
-    } finally q.stop()
-  }
-
-  test("enrichWithStaticDim: stream rows pick up dim columns, misses stay null") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    val input = MemoryStream[(Long, Double)]
-    val q = StreamingPipeline.enrichWithStaticDim(
-      input.toDF().toDF("user_id", "amount"), dim, Seq("user_id"))
-      .writeStream.format("memory").queryName("dim_enrich")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, 10.0), (3L, 5.0))
-      q.processAllAvailable()
-      val rows = spark.table("dim_enrich")
-        .collect().map(r => (r.getLong(0), Option(r.getString(2)))).toSet
-      assert(rows === Set((1L, Some("gold")), (3L, None)))
-    } finally q.stop()
-  }
-
-  test("streamStreamIntervalJoin: clicks attribute to impressions within the gap only") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val imps = MemoryStream[(Long, java.sql.Timestamp)]
-    val clicks = MemoryStream[(Long, java.sql.Timestamp)]
-    val joined = StreamingPipeline.streamStreamIntervalJoin(
-      imps.toDF().toDF("user_id", "imp_ts"),
-      clicks.toDF().toDF("user_id", "click_ts"),
-      keyCol = "user_id", leftTsCol = "imp_ts", rightTsCol = "click_ts",
-      delay = "10 minutes", maxGap = "30 minutes")
-    val q = joined.writeStream.format("memory").queryName("attrib")
-      .outputMode("append").start()
-    try {
-      imps.addData((1L, ts("2024-01-01 10:00:00")))
-      clicks.addData(
-        (1L, ts("2024-01-01 10:10:00")),  // within 30 min -> match
-        (1L, ts("2024-01-01 10:50:00")),  // outside the gap -> no match
-        (2L, ts("2024-01-01 10:05:00")))  // no impression -> no match
-      q.processAllAvailable()
-      val rows = spark.table("attrib")
-        .collect().map(r => (r.getLong(0), r.getTimestamp(2).toString)).toSet
-      assert(rows === Set((1L, "2024-01-01 10:10:00.0")))
-    } finally q.stop()
-  }
-
-  test("dedupStreamAgainstCorpus: foreachBatch survivors match batch incrementalDedup") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Dedup
-    val corpus = spark.createDataFrame(Seq(
-      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (2L, "training data pipelines need deduplication at scale to stay clean")
-    )).toDF("doc_id", "text")
-    // 10: exact dup of corpus 1; 11: near-dup of corpus 2 (one word tweak);
-    // 12: unique; 13: near-dup of 12 WITHIN the batch — survives, because
-    // incrementalDedup checks new×corpus only (contract)
-    val newDocs = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (11L, "training data pipelines need deduplication at scale to remain clean"),
-      (12L, "completely unrelated sentence about spark catalyst optimizer rules"),
-      (13L, "completely unrelated sentence about spark catalyst optimizer rule"))
-
-    val expected = Dedup.incrementalDedup(
-      spark.createDataFrame(newDocs).toDF("doc_id", "text"), corpus,
-      "doc_id", "text", threshold = 0.5)
-      .collect().map(_.getLong(0)).toSet
-
-    val collected = scala.collection.mutable.Set[Long]()
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.dedupStreamAgainstCorpus(
-      input.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text",
-      sink = (batch, _) =>
-        collected.synchronized { collected ++= batch.collect().map(_.getLong(0)) },
-      threshold = 0.5)
-    try {
-      input.addData(newDocs)
-      q.processAllAvailable()
-      assert(collected.toSet === expected)
-      assert(!collected.contains(10L) && !collected.contains(11L))
-      assert(collected.contains(12L) && collected.contains(13L))
-    } finally q.stop()
-  }
-
   test("substrScrubStream: batch docs scrubbed of verbatim corpus runs via the index") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
@@ -905,7 +696,7 @@ class StreamingSpec extends SparkSpec {
 
     val got = scala.collection.mutable.Map[Long, (String, Long, Long)]()
     val input = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.substrScrubStream(
+    val q = StreamingExtensions.substrScrubStream(
       input.toDF().toDF("doc_id", "text"), idxPath, "doc_id", "text",
       sink = (cleaned, _) => got.synchronized {
         cleaned.collect().foreach(r =>
@@ -938,7 +729,7 @@ class StreamingSpec extends SparkSpec {
 
     val perEpoch = scala.collection.mutable.Map[Long, Set[Long]]()
     val input = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.nearDupScrubStream(
+    val q = StreamingExtensions.nearDupScrubStream(
       input.toDF().toDF("doc_id", "text"), idxPath, "doc_id", "text",
       sink = (kept, epoch) => perEpoch.synchronized {
         perEpoch(epoch) = kept.select("doc_id").as[Long].collect().toSet
@@ -964,7 +755,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     val input = MemoryStream[(Long, String)]
-    val gated = StreamingPipeline.qualityGateStream(
+    val gated = StreamingExtensions.qualityGateStream(
       input.toDF().toDF("doc_id", "text"), "text")
     val q = gated.writeStream.outputMode("append")
       .format("memory").queryName("quality_gate").start()
@@ -985,7 +776,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val rows = (0L until 500L).map(i => (i, s"v${i % 13}"))
     val input = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.fingerprintStream(
+    val q = StreamingExtensions.fingerprintStream(
         input.toDF().toDF("k", "v"), Seq("k", "v"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("fp_stream").start()
@@ -1016,14 +807,17 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("cms_stream")
       .outputMode("complete").start()
     try {
+      def batchGrid(keys: Seq[String]): Seq[Long] = keys.toDF("key")
+        .agg(graft.functions.CountMinFunctions.cmsSketch(col("key")).as("grid"))
+        .as[Seq[Long]].head()
       input.addData(rows.take(150))
       q.processAllAvailable()
+      // the first emission already equals the batch grid of its prefix
+      assert(spark.table("cms_stream").as[Seq[Long]].head() === batchGrid(rows.take(150)))
       input.addData(rows.drop(150))
       q.processAllAvailable()
       val streamed = spark.table("cms_stream").as[Seq[Long]].head()
-      val batch = rows.toDF("key")
-        .agg(graft.functions.CountMinFunctions.cmsSketch(col("key")).as("grid"))
-        .as[Seq[Long]].head()
+      val batch = batchGrid(rows)
       // element-wise-add merges make the streamed grid bit-equal to the
       // one-shot batch grid — the mergeable-sketch contract under
       // incremental state
@@ -1072,7 +866,7 @@ class StreamingSpec extends SparkSpec {
       base ++ bot
     }
     val input = MemoryStream[graft.streaming.UserEvent]
-    val q = StreamingPipeline.trendingStream(
+    val q = StreamingExtensions.trendingStream(
         input.toDS(), "10 minutes", k = 16, delay = "0 seconds")
       .writeStream.format("memory").queryName("trending")
       .outputMode("append").start()
@@ -1130,7 +924,7 @@ class StreamingSpec extends SparkSpec {
       1000000L * num / (2 * nWin * nRef)
     }
     val input = MemoryStream[graft.streaming.UserEvent]
-    val q = StreamingPipeline.driftStream(input.toDS(), refHist,
+    val q = StreamingExtensions.driftStream(input.toDS(), refHist,
         binWidthCents = 100L, windowDur = "10 minutes",
         delay = "0 seconds", thresholdPpm = 200000L)
       .writeStream.format("memory").queryName("drift")
@@ -1206,13 +1000,13 @@ class StreamingSpec extends SparkSpec {
       val name = s"asof_stream_${System.nanoTime()}"
       val joined =
         if (nearestHorizonMs > 0L)
-          StreamingPipeline.asofNearestStream(
+          StreamingExtensions.asofNearestStream(
             li.toDS(), ri.toDS(), horizonMs = nearestHorizonMs, delay = "1 hour")
         else if (forwardHorizonMs > 0L)
-          StreamingPipeline.asofForwardStream(
+          StreamingExtensions.asofForwardStream(
             li.toDS(), ri.toDS(), horizonMs = forwardHorizonMs, delay = "1 hour")
         else
-          StreamingPipeline.asofBackwardStream(
+          StreamingExtensions.asofBackwardStream(
             li.toDS(), ri.toDS(), delay = "1 hour", toleranceMs = toleranceMs)
       val q = joined
         .writeStream.format("memory").queryName(name)
@@ -1412,7 +1206,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val in = MemoryStream[TypedEvent]
       val name = s"spike_stream_${System.nanoTime()}"
-      val q = StreamingPipeline.rateSpikeStream(in.toDS(), delay = "1 hour")
+      val q = StreamingExtensions.rateSpikeStream(in.toDS(), delay = "1 hour")
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -1466,7 +1260,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val in = MemoryStream[UserEvent]
       val name = s"cusum_stream_${System.nanoTime()}"
-      val q = StreamingPipeline.cusumStream(in.toDS(), delay = "1 hour")
+      val q = StreamingExtensions.cusumStream(in.toDS(), delay = "1 hour")
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -1544,7 +1338,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[VecRow]
     // complete mode: the memory table always holds exactly the current
     // running aggregate — state is the one packed-triangle buffer
-    val q = StreamingPipeline.gramStream(input.toDF(), d)
+    val q = StreamingExtensions.gramStream(input.toDF(), d)
       .writeStream.format("memory").queryName("gram_stream_test")
       .outputMode("complete").start()
     try {
@@ -1568,7 +1362,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[UserEvent]
-    val q = StreamingPipeline.hllStream(input.toDS())
+    val q = StreamingExtensions.hllStream(input.toDS())
       .writeStream.format("memory").queryName("hll_stream_test")
       .outputMode("update").start()
     def registers(): Map[Long, Long] =
@@ -1610,7 +1404,7 @@ class StreamingSpec extends SparkSpec {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[UserEvent]
     val qs = Seq(0.5, 0.95, 0.99)
-    val q = StreamingPipeline.quantileStream(input.toDS(), 0.01, qs)
+    val q = StreamingExtensions.quantileStream(input.toDS(), 0.01, qs)
       .writeStream.format("memory").queryName("gk_stream_test")
       .outputMode("update").start()
     def check(valuesSoFar: Seq[Double]): Unit = {
@@ -1651,53 +1445,12 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("cmsStream: point estimates never undercount at every emission") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val input = MemoryStream[UserEvent]
-    val (depth, width) = (4, 256)
-    val q = StreamingPipeline.cmsStream(input.toDS(), depth, width)
-      .writeStream.format("memory").queryName("cms_stream_test")
-      .outputMode("update").start()
-    def check(keysSoFar: Seq[Long]): Unit = {
-      val row = spark.table("cms_stream_test").collect().maxBy(_.getLong(0))
-      assert(row.getLong(0) == keysSoFar.size.toLong)
-      val grid = row.getSeq[Long](1)
-      assert(grid.size == depth * width)
-      // mass conservation: each row of the grid holds exactly n counts
-      assert(grid.sum == depth.toLong * keysSoFar.size)
-      val trueCounts =
-        keysSoFar.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-      trueCounts.foreach { case (k, n) =>
-        val cells = graft.functions.CountMinOps.cells(
-          org.apache.spark.unsafe.types.UTF8String.fromString(k.toString),
-          depth, width)
-        val est =
-          (0 until depth).map(r => grid(r * width + cells.getLong(r).toInt)).min
-        assert(est >= n, s"key $k undercounted: est $est < true $n")
-      }
-    }
-    try {
-      val b1 = (1 to 400).map(i =>
-        UserEvent((i * i % 37).toLong, ts("2024-01-01 10:00:00"), 1.0))
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      check(b1.map(_.user_id))
-      // second micro-batch merges cell-wise into the SAME grid
-      val b2 = (1 to 300).map(i =>
-        UserEvent((i % 151).toLong, ts("2024-01-01 10:05:00"), 1.0))
-      input.addData(b2: _*)
-      q.processAllAvailable()
-      check((b1 ++ b2).map(_.user_id))
-    } finally q.stop()
-  }
-
   test("topkStream: Misra-Gries guarantee holds across micro-batch merges") {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[UserEvent]
     val k = 8
-    val q = StreamingPipeline.topkStream(input.toDS(), k)
+    val q = StreamingExtensions.topkStream(input.toDS(), k)
       .writeStream.format("memory").queryName("topk_stream_test")
       .outputMode("update").start()
     def check(keysSoFar: Seq[Long]): Unit = {
