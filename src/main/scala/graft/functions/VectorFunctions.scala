@@ -18,26 +18,6 @@ object VecOps {
     s
   }
 
-  def norm(a: ArrayData): Double = {
-    val x = a.toFloatArray()
-    var s = 0.0; var i = 0
-    while (i < x.length) { s += x(i).toDouble * x(i).toDouble; i += 1 }
-    math.sqrt(s)
-  }
-
-  /** Plain-array cosine for typed (non-Catalyst) call sites, e.g. the
-    * streaming broadcast-index probe. Same accumulation order as
-    * `cosine(ArrayData, ArrayData)`. */
-  def cosineArrays(x: Array[Float], y: Array[Float]): Double = {
-    val n = math.min(x.length, y.length)
-    var d = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      val xi = x(i).toDouble; val yi = y(i).toDouble
-      d += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) 0.0 else d / math.sqrt(nx * ny)
-  }
-
   /** Exact integer dot product of two int8-quantized vectors (stored as
     * array<int>). Never overflows: 64 dims × 127² ≈ 2^20 per pair, and a
     * long accumulator gives 2^43 headroom beyond any real dimensionality.
@@ -60,34 +40,6 @@ object VecOps {
       d += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
     }
     if (nx == 0.0 || ny == 0.0) 0.0 else d / math.sqrt(nx * ny)
-  }
-
-  /** Plain-array int8 quantizer for typed (non-Catalyst) call sites, e.g.
-    * the streaming broadcast-index probe. Bit-identical to the Column
-    * `VectorFunctions.quantizeInt8` (same max-abs scale, same
-    * BigDecimal HALF_UP rounding Spark's `round` uses on doubles), but
-    * packed into BYTES — values lie in [-127, 127], so the broadcast
-    * index really is 4× smaller than float32, the whole point at scale. */
-  def quantizeInt8Bytes(v: Array[Float]): Array[Byte] = {
-    var m = 0.0; var i = 0
-    while (i < v.length) { val a = math.abs(v(i).toDouble); if (a > m) m = a; i += 1 }
-    val out = new Array[Byte](v.length)
-    if (m == 0.0) return out
-    i = 0
-    while (i < v.length) {
-      out(i) = java.math.BigDecimal.valueOf(v(i).toDouble * 127.0 / m)
-        .setScale(0, java.math.RoundingMode.HALF_UP).byteValue
-      i += 1
-    }
-    out
-  }
-
-  /** Exact integer dot of two byte-packed int8 vectors. */
-  def dotBytes(a: Array[Byte], b: Array[Byte]): Long = {
-    val n = math.min(a.length, b.length)
-    var s = 0L; var i = 0
-    while (i < n) { s += a(i).toLong * b(i).toLong; i += 1 }
-    s
   }
 
   /** Cosine over array<double> vectors (e.g. JL-projected embeddings) —
@@ -188,8 +140,9 @@ object VectorFunctions {
   def dotProduct(a: Column, b: Column): Column =
     internal(DotProduct(expr(a), expr(b)))
 
-  /** L2 norm via builtins (aggregate HOF) — reference implementation used
-    * in tests to cross-check the native expressions. */
+  /** Cosine similarity via builtins (`zip_with` + `aggregate` HOFs) — the
+    * reference implementation tests cross-check the native expression
+    * against. */
   def cosineSimBuiltin(a: Column, b: Column): Column = {
     def d(c: Column) = c.cast("double")
     val dot = F.aggregate(F.zip_with(a, b, (x, y) => d(x) * d(y)), F.lit(0.0), (s, v) => s + v)

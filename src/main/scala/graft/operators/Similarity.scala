@@ -7,20 +7,49 @@ import org.apache.spark.sql.DataFrame
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two paths:
-  *  - `bruteForceTopK` — exact: broadcast the (small) query set against the
-  *    corpus, native-expression cosine, per-query top-k. O(|corpus|·|Q|)
-  *    but embarrassingly parallel and shuffle-free until the final top-k;
-  *    the right baseline and the correctness oracle for the ANN paths.
-  *  - `lshTopK` — scale path: random-hyperplane signatures bucket the
-  *    corpus; queries probe matching buckets across `bands` independent
-  *    hash families; candidates are re-ranked with exact cosine. Work per
-  *    query is bucket-sized, not corpus-sized.
+  * Batch operators only: a streaming caller runs them on each micro-batch
+  * in `foreachBatch`. `bruteForceTopK` is exact (broadcast the small query
+  * set against the corpus, native-expression cosine) and is the
+  * correctness oracle for the ANN paths: LSH buckets (`lshTopK`), IVF
+  * cells (`ivfTopK` and its materialized index), int8 (`int8TopK`) and
+  * product quantization (`pqTopK`).
   *
-  * Top-k uses a window row_number with deterministic tie-break (cosine
-  * desc, then corpus id) — stable across engines and runs.
+  * Every top-k ranks through one helper, `topKPerQuery`: a per-query
+  * row_number ordered by score desc, then id — a deterministic tie-break,
+  * stable across engines and runs.
   */
 object Similarity {
+
+  /** The ranking policy: per `queryIdCol`, order by `scoreCol` desc then
+    * `idCol`, keep rows with `rank` ≤ k. */
+  private def topKPerQuery(scored: DataFrame, queryIdCol: String,
+                           scoreCol: String, idCol: String, k: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(Window.partitionBy(col(queryIdCol))
+        .orderBy(col(scoreCol).desc, col(idCol))))
+      .filter(col("rank") <= k)
+
+  /** The IVF cell probe: each query scores the broadcast centroids and
+    * keeps its `nprobe` best cells as (queryIdCol, centroidIdCol, q_vec). */
+  private def probeCells(queries: DataFrame, centroids: DataFrame, nprobe: Int,
+                         vecCol: String, queryIdCol: String,
+                         centroidIdCol: String): DataFrame =
+    topKPerQuery(queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
+      .join(broadcast(centroids.select(col(centroidIdCol), col(vecCol).as("c_vec"))))
+      .withColumn("c_cos", VectorFunctions.cosineSim(col("q_vec"), col("c_vec"))),
+      queryIdCol, "c_cos", centroidIdCol, nprobe)
+      .select(col(queryIdCol), col(centroidIdCol), col("q_vec"))
+
+  /** The probed cells of a materialized IVF index. Probe cell ids are
+    * resolved on the driver (|Q|·nprobe longs — metadata, not data) so the
+    * cell filter is a literal IN-list that prunes partitions at scan time. */
+  private def readProbedCells(spark: org.apache.spark.sql.SparkSession,
+                              path: String, probes: DataFrame,
+                              centroidIdCol: String): DataFrame = {
+    val probed = probes.select(centroidIdCol).distinct()
+      .collect().map(_.getLong(0))
+    spark.read.parquet(path).filter(col(centroidIdCol).isin(probed: _*))
+  }
 
   /** Exact cosine top-k: every (query, corpus) pair, k best per query. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -30,11 +59,7 @@ object Similarity {
     val scored = corpus.select(col(idCol), col(vecCol))
       .join(broadcast(q))
       .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec")))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, queryIdCol, "cosine", idCol, k)
       .select(col(queryIdCol), col("rank"), col(idCol), col("cosine"))
   }
 
@@ -52,12 +77,9 @@ object Similarity {
       VectorFunctions.quantizeInt8(col(vecCol)).as("qv"))
     val q = queries.select(col(queryIdCol),
       VectorFunctions.quantizeInt8(col(vecCol)).as("qq"))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("qdot").desc, col(idCol))
-    c.join(broadcast(q))
-      .withColumn("qdot", VectorFunctions.int8Dot(col("qv"), col("qq")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(c.join(broadcast(q))
+      .withColumn("qdot", VectorFunctions.int8Dot(col("qv"), col("qq"))),
+      queryIdCol, "qdot", idCol, k)
       .select(col(queryIdCol), col("rank"), col(idCol), col("qdot"))
   }
 
@@ -79,12 +101,8 @@ object Similarity {
     val cands = c.join(broadcast(q), Seq("band", "band_key"))
       .select(col(queryIdCol), col(idCol), col(vecCol), col("q_vec"))
       .dropDuplicates(queryIdCol, idCol)
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    cands
       .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(cands, queryIdCol, "cosine", idCol, k)
       .select(col(queryIdCol), col("rank"), col(idCol), col("cosine"))
   }
 
@@ -166,21 +184,11 @@ object Similarity {
               centroidIdCol: String = "centroid_id"): DataFrame = {
     val cells = assignToCentroids(corpus, centroids, idCol, vecCol, centroidIdCol)
       .select(col(centroidIdCol), col(idCol), col(vecCol))
-    val qScored = queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
-      .join(broadcast(centroids.select(col(centroidIdCol), col(vecCol).as("c_vec"))))
-      .withColumn("c_cos", VectorFunctions.cosineSim(col("q_vec"), col("c_vec")))
-    val wq = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("c_cos").desc, col(centroidIdCol))
-    val probes = qScored
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nprobe)
-      .select(col(queryIdCol), col(centroidIdCol), col("q_vec"))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    cells.join(broadcast(probes), Seq(centroidIdCol))
-      .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val probes = probeCells(queries, centroids, nprobe, vecCol, queryIdCol,
+      centroidIdCol)
+    topKPerQuery(cells.join(broadcast(probes), Seq(centroidIdCol))
+      .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec"))),
+      queryIdCol, "cosine", idCol, k)
       .select(col(queryIdCol), col("rank"), col(idCol), col("cosine"))
   }
 
@@ -298,34 +306,20 @@ object Similarity {
     cents
   }
 
-  /** Query a materialized IVF index. Probe cell ids are resolved on the
-    * driver (|Q|·nprobe longs — metadata, not data) so the cell filter is
-    * a literal IN-list that prunes partitions at scan time. */
+  /** Query a materialized IVF index: only the probed cells' partitions
+    * are read (see `readProbedCells`). */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        queries: DataFrame, centroids: DataFrame, k: Int,
                        nprobe: Int = 2,
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        queryIdCol: String = "query_id",
                        centroidIdCol: String = "centroid_id"): DataFrame = {
-    val qScored = queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
-      .join(broadcast(centroids.select(col(centroidIdCol), col(vecCol).as("c_vec"))))
-      .withColumn("c_cos", VectorFunctions.cosineSim(col("q_vec"), col("c_vec")))
-    val wq = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("c_cos").desc, col(centroidIdCol))
-    val probes = qScored
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nprobe)
-      .select(col(queryIdCol), col(centroidIdCol), col("q_vec"))
-    val probeCells = probes.select(centroidIdCol).distinct()
-      .collect().map(_.getLong(0))
-    val cells = spark.read.parquet(path)
-      .filter(col(centroidIdCol).isin(probeCells: _*))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    cells.join(broadcast(probes), Seq(centroidIdCol))
-      .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val probes = probeCells(queries, centroids, nprobe, vecCol, queryIdCol,
+      centroidIdCol)
+    topKPerQuery(readProbedCells(spark, path, probes, centroidIdCol)
+      .join(broadcast(probes), Seq(centroidIdCol))
+      .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec"))),
+      queryIdCol, "cosine", idCol, k)
       .select(col(queryIdCol), col("rank"), col(idCol), col("cosine"))
   }
 
@@ -343,20 +337,10 @@ object Similarity {
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         queryIdCol: String = "query_id",
                         centroidIdCol: String = "centroid_id"): DataFrame = {
-    val qScored = queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
-      .join(broadcast(centroids.select(col(centroidIdCol), col(vecCol).as("c_vec"))))
-      .withColumn("c_cos", VectorFunctions.cosineSim(col("q_vec"), col("c_vec")))
-    val wq = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("c_cos").desc, col(centroidIdCol))
-    val probes = qScored
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nprobe)
-      .select(col(queryIdCol), col(centroidIdCol), col("q_vec"))
-    val probeCells = probes.select(centroidIdCol).distinct()
-      .collect().map(_.getLong(0))
-    val cells = spark.read.parquet(path)
-      .filter(col(centroidIdCol).isin(probeCells: _*))
-    cells.join(broadcast(probes), Seq(centroidIdCol))
+    val probes = probeCells(queries, centroids, nprobe, vecCol, queryIdCol,
+      centroidIdCol)
+    readProbedCells(spark, path, probes, centroidIdCol)
+      .join(broadcast(probes), Seq(centroidIdCol))
       .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec")))
       .filter(col("cosine") >= minCosine)
       .select(col(queryIdCol), col(idCol), col("cosine"))
@@ -420,14 +404,12 @@ object Similarity {
     pqTopKOverCells(pqEncode(corpus, codebooks, subDim, idCol, vecCol),
       corpus, queries, codebooks, k, rerank, subDim, idCol, vecCol, queryIdCol)
 
-  /** The ADC scoring stage alone: (queryIdCol, idCol, adc) for every
-    * (query, corpus vector) pair — the sub-ascending double fold of the
-    * query's LUT entries at the vector's codes. Exposed so the
-    * streaming probe can be parity-tested against it bit-for-bit. */
-  def pqAdcScores(cells: DataFrame, queries: DataFrame,
-                  codebooks: DataFrame, subDim: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  queryIdCol: String = "query_id"): DataFrame = {
+  /** The ADC scoring stage of `pqTopKOverCells`: (queryIdCol, idCol, adc)
+    * for every (query, corpus vector) pair — the sub-ascending double fold
+    * of the query's LUT entries at the vector's codes. */
+  private def pqAdcScores(cells: DataFrame, queries: DataFrame,
+                          codebooks: DataFrame, subDim: Int, idCol: String,
+                          vecCol: String, queryIdCol: String): DataFrame = {
     val lut = queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
       .join(broadcast(codebooks.select(col("sub"),
         col("centroid_id").as("code"), col(vecCol).as("c_vec"))))
@@ -443,7 +425,9 @@ object Similarity {
   }
 
   /** ADC + rerank over an already-encoded (id, sub, code) cell table —
-    * shared by the inline and materialized-index forms. */
+    * the one PQ search, shared by the inline `pqTopK` and the
+    * materialized code index: the top `rerank` candidates by ADC score
+    * pay the exact-cosine rerank, both ranked by `topKPerQuery`. */
   def pqTopKOverCells(cells: DataFrame, corpus: DataFrame,
                       queries: DataFrame, codebooks: DataFrame,
                       k: Int, rerank: Int, subDim: Int,
@@ -451,250 +435,16 @@ object Similarity {
                       queryIdCol: String = "query_id"): DataFrame = {
     val adc = pqAdcScores(cells, queries, codebooks, subDim,
       idCol, vecCol, queryIdCol)
-    val wc = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("adc").desc, col(idCol))
-    val cand = adc
-      .withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= rerank)
+    val cand = topKPerQuery(adc, queryIdCol, "adc", idCol, rerank)
       .select(col(queryIdCol), col(idCol))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    cand.join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
+    topKPerQuery(cand.join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
       .join(broadcast(queries.select(col(queryIdCol), col(vecCol).as("q_vec"))),
         Seq(queryIdCol))
-      .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec"))),
+      queryIdCol, "cosine", idCol, k)
       .select(col(queryIdCol), col("rank"), col(idCol), col("cosine"))
   }
 
-  /** One streaming top-k hit. */
-  case class TopKHit(query_id: Long, rank: Int, vec_id: Long, cosine: Double)
-
-  /** One streaming PQ hit — ADC (asymmetric-distance) score. */
-  case class TopKHitAdc(query_id: Long, rank: Int, vec_id: Long, adc: Double)
-
-  /** Streaming PQ probe: the broadcast index is the CODE table plus the
-    * codebooks — `subspaces` small ints per corpus vector instead of
-    * 4·dim bytes (64-dim float32 → ~64× more vectors per executor than
-    * a flat float broadcast, ~16× more than int8). Each arriving query
-    * builds its subspaces×codes dot-product LUT once, then scores every
-    * corpus vector with `subspaces` array lookups, summed in
-    * sub-ascending order — bit-identical to the batch [[pqAdcScores]]
-    * fold (parity-tested). Ordering is the ADC approximation; the exact
-    * rerank of the emitted ids happens downstream as a point-lookup.
-    * Zero shuffle, zero state. */
-  def topKStreamPq(queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                   books: Array[(Int, Long, Array[Float])],
-                   codes: Array[(Long, Array[Int])],
-                   k: Int, subDim: Int = 16): org.apache.spark.sql.Dataset[TopKHitAdc] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bcBooks = spark.sparkContext.broadcast(books)
-    val bcCodes = spark.sparkContext.broadcast(codes)
-    queries.mapPartitions { it =>
-      val bks = bcBooks.value
-      val subspaces = bks.iterator.map(_._1).max + 1
-      val nCodes = bks.iterator.map(_._2).max.toInt + 1
-      it.flatMap { case (qid, qv) =>
-        val lut = Array.ofDim[Double](subspaces, nCodes)
-        bks.foreach { case (sub, code, cv) =>
-          var s = 0.0
-          var i = 0
-          while (i < cv.length) {
-            s += qv(sub * subDim + i).toDouble * cv(i).toDouble
-            i += 1
-          }
-          lut(sub)(code.toInt) = s
-        }
-        bcCodes.value.iterator.map { case (id, cs) =>
-          var s = 0.0
-          var j = 0
-          while (j < cs.length) { s += lut(j)(cs(j)); j += 1 }
-          (id, s)
-        }.toArray
-          .sortBy { case (id, s) => (-s, id) }
-          .take(k)
-          .iterator
-          .zipWithIndex
-          .map { case ((id, s), i) => TopKHitAdc(qid, i + 1, id, s) }
-      }
-    }
-  }
-
-  /** One streaming int8 hit — integer-exact score. */
-  case class TopKHitInt8(query_id: Long, rank: Int, vec_id: Long, qdot: Long)
-
-  /** Streaming top-k against an int8-QUANTIZED broadcast index: the
-    * corpus ships as BYTE-packed vectors — genuinely 4× smaller than the
-    * float32 broadcast of `topKStream`, so an executor holds 4× the
-    * corpus before needing the IVF escape hatch. Scores are exact integer
-    * dots (same quantization as the batch `int8TopK`, rank-parity
-    * tested). Zero shuffle, zero streaming state. */
-  def topKStreamInt8(queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                     corpus: Array[(Long, Array[Float])],
-                     k: Int): org.apache.spark.sql.Dataset[TopKHitInt8] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val packed = corpus.map { case (id, v) =>
-      (id, graft.functions.VecOps.quantizeInt8Bytes(v)) }
-    val bc = spark.sparkContext.broadcast(packed)
-    queries.mapPartitions { it =>
-      val corp = bc.value
-      it.flatMap { case (qid, qv) =>
-        val qq = graft.functions.VecOps.quantizeInt8Bytes(qv)
-        corp.iterator
-          .map { case (id, v) => (id, graft.functions.VecOps.dotBytes(qq, v)) }
-          .toArray
-          .sortBy { case (id, d) => (-d, id) }
-          .take(k)
-          .iterator
-          .zipWithIndex
-          .map { case ((id, d), i) => TopKHitInt8(qid, i + 1, id, d) }
-      }
-    }
-  }
-
-  /** Streaming (or batch) top-k against a BROADCAST index: the
-    * static-corpus / streaming-queries shape of interactive similarity
-    * search — the index ships once per executor, each arriving query is
-    * scored in a tight local loop, no shuffle at all. `corpus` must fit
-    * in executor memory (exact scan); at warehouse scale the same probe
-    * runs against per-cell IVF sub-indexes (ivfTopKFromIndex) instead.
-    * Works identically on a MemoryStream/Kafka source or a batch Dataset
-    * because it is a pure mapPartitions. */
-  def topKStream(queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                 corpus: Array[(Long, Array[Float])],
-                 k: Int): org.apache.spark.sql.Dataset[TopKHit] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(corpus)
-    queries.mapPartitions { it =>
-      val corp = bc.value
-      it.flatMap { case (qid, qv) =>
-        corp.iterator
-          .map { case (id, v) => (id, graft.functions.VecOps.cosineArrays(qv, v)) }
-          .toArray
-          .sortBy { case (id, cos) => (-cos, id) }
-          .take(k)
-          .iterator
-          .zipWithIndex
-          .map { case ((id, cos), i) => TopKHit(qid, i + 1, id, cos) }
-      }
-    }
-  }
-
-  /** Streaming IVF probe: `topKStream` with cell pruning — the broadcast
-    * index is pre-grouped by centroid cell, a query scores the (few,
-    * small) centroids first and scans only its `nprobe` best cells. Same
-    * zero-shuffle mapPartitions shape as `topKStream`; work per query is
-    * cell-sized, not corpus-sized — the scale path for streaming
-    * similarity once the corpus outgrows a flat broadcast scan. */
-  def topKStreamIvf(queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                    centroids: Array[(Long, Array[Float])],
-                    cells: Map[Long, Array[(Long, Array[Float])]],
-                    k: Int, nprobe: Int = 2): org.apache.spark.sql.Dataset[TopKHit] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bcCents = spark.sparkContext.broadcast(centroids)
-    val bcCells = spark.sparkContext.broadcast(cells)
-    queries.mapPartitions { it =>
-      val cents = bcCents.value
-      val byCell = bcCells.value
-      it.flatMap { case (qid, qv) =>
-        val probes = cents
-          .map { case (cid, cv) => (cid, graft.functions.VecOps.cosineArrays(qv, cv)) }
-          .sortBy { case (cid, cos) => (-cos, cid) }
-          .take(nprobe)
-          .map(_._1)
-        probes.iterator
-          .flatMap(cid => byCell.getOrElse(cid, Array.empty[(Long, Array[Float])]))
-          .map { case (id, v) => (id, graft.functions.VecOps.cosineArrays(qv, v)) }
-          .toArray
-          .sortBy { case (id, cos) => (-cos, id) }
-          .take(k)
-          .iterator
-          .zipWithIndex
-          .map { case ((id, cos), i) => TopKHit(qid, i + 1, id, cos) }
-      }
-    }
-  }
-
-  /** Build the broadcastable cell map for `topKStreamIvf` from a corpus
-    * and trained centroids (driver-side collect — the index must fit in
-    * memory by construction). */
-  def collectCells(corpus: DataFrame, centroids: DataFrame,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   centroidIdCol: String = "centroid_id")
-      : (Array[(Long, Array[Float])], Map[Long, Array[(Long, Array[Float])]]) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = centroids.select(col(centroidIdCol), col(vecCol))
-      .as[(Long, Array[Float])].collect()
-    val assigned = assignToCentroids(corpus, centroids, idCol, vecCol, centroidIdCol)
-      .select(col(centroidIdCol), col(idCol), col(vecCol))
-      .as[(Long, Long, Array[Float])].collect()
-    val cells = assigned.groupBy(_._1).map { case (cid, rows) =>
-      cid -> rows.map(r => (r._2, r._3))
-    }
-    (cents, cells)
-  }
-
-  /** Distributed streaming ANN probe — the corpus NEVER leaves the
-    * executors. Per micro-batch: each query scores the broadcast
-    * centroids (driver-sized by construction: autoK ⇒ ~√n of them) and
-    * keeps its `nprobe` best cells, the batch equijoins the STATIC
-    * cell-keyed corpus frame on centroid_id, and the per-query top-k of
-    * the exact cosines goes to the sink. Contrast `topKStreamIvf`, whose
-    * `collectCells` index is a driver-collected serving cache: this is
-    * the probe that still works when the corpus is 100 TB — with the
-    * corpus written partitioned by cell the join prunes to the probed
-    * cells' partitions, and the shuffle carries only the micro-batch's
-    * (query × nprobe) rows, never the corpus. Cell scoring uses the same
-    * ascending-index cosine fold as the batch paths, so results match
-    * `topKStreamIvf` exactly. */
-  def topKStreamJoin(queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                     corpusCells: DataFrame,
-                     centroids: Array[(Long, Array[Float])],
-                     sink: (DataFrame, Long) => Unit,
-                     k: Int, nprobe: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bcCents = spark.sparkContext.broadcast(centroids)
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                       epochId: Long) =>
-        val probed = batch.mapPartitions { it =>
-          val cents = bcCents.value
-          it.flatMap { case (qid, qv) =>
-            cents
-              .map { case (cid, cv) =>
-                (cid, graft.functions.VecOps.cosineArrays(qv, cv)) }
-              .sortBy { case (cid, cos) => (-cos, cid) }
-              .take(nprobe)
-              .map { case (cid, _) => (qid, qv, cid) }
-          }
-        }.toDF("query_id", "qv", "centroid_id")
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("vec_id"))
-        val topk = probed.join(corpusCells, Seq("centroid_id"))
-          .withColumn("cosine",
-            graft.functions.VectorFunctions.cosineSim(col("qv"), col("embedding")))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= k)
-          .select(col("query_id"), col("rnk"), col("vec_id"), col("cosine"))
-        sink(topk, epochId)
-      }
-      .start()
-  }
-
-  /** IVF-style coarse quantization: assign every vector to the nearest of
-    * `centroids` (a small broadcast table of (centroid_id, vector)); ANN
-    * then searches only the probed cells. This is the classic inverted-file
-    * layout — at 100 TB the corpus is written partitioned by cell id so a
-    * query touches a handful of partitions. */
   /** Hard-negative mining for contrastive / embedding training: for
     * each query, the top-k most-similar corpus vectors drawn from a
     * DIFFERENT cluster than the query's own. Same-cluster neighbors are
@@ -721,14 +471,15 @@ object Similarity {
       .join(broadcast(q))
       .filter(col("c_cell") =!= col("q_cell"))
       .withColumn("cosine", VectorFunctions.cosineSim(col(vecCol), col("q_vec")))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, queryIdCol, "cosine", idCol, k)
       .select(col(queryIdCol), col("rank"), col(idCol), col("cosine"))
   }
 
+  /** IVF-style coarse quantization: assign every vector to the nearest of
+    * `centroids` (a small broadcast table of (centroid_id, vector)); ANN
+    * then searches only the probed cells. This is the classic inverted-file
+    * layout — at 100 TB the corpus is written partitioned by cell id so a
+    * query touches a handful of partitions. */
   def assignToCentroids(corpus: DataFrame, centroids: DataFrame,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         centroidIdCol: String = "centroid_id"): DataFrame = {

@@ -264,168 +264,39 @@ class StreamingSpec extends SparkSpec {
       sortedRows(StreamingPipeline.hotelsCount(StreamingPipeline.enrich(ref))))))
   }
 
-  test("topKStream: streaming probes against a broadcast index match batch brute force") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Similarity
-    val corpusDf = sources.Tables.load(spark, sfDir, "embeddings")
-      .select("vec_id", "embedding")
-    val corpus = corpusDf.as[(Long, Array[Float])].collect()
-    val queryVecs = corpus.filter(_._1 < 3)
-
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.topKStream(input.toDS(), corpus, k = 5)
-      .writeStream.format("memory").queryName("tws_topk").outputMode("append")
-      .start()
-    try {
-      input.addData(queryVecs.toSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("tws_topk")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val batch = Similarity.bruteForceTopK(
-        corpusDf,
-        corpusDf.filter(col("vec_id") < 3)
-          .select(col("vec_id").as("query_id"), col("embedding")),
-        k = 5)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      assert(streamed === batch)
-      assert(streamed.exists { case (qid, rank, vid) => qid == 0L && rank == 1 && vid == 0L })
-    } finally q.stop()
-  }
-
-  test("topKStreamInt8: byte-packed broadcast probe matches batch int8TopK") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Similarity
-    val corpusDf = sources.Tables.load(spark, sfDir, "embeddings")
-      .select("vec_id", "embedding")
-    val corpus = corpusDf.as[(Long, Array[Float])].collect()
-    val queryVecs = corpus.filter(_._1 < 3)
-
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.topKStreamInt8(input.toDS(), corpus, k = 5)
-      .writeStream.format("memory").queryName("tws_topk_i8").outputMode("append")
-      .start()
-    try {
-      input.addData(queryVecs.toSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("tws_topk_i8")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-      val batch = Similarity.int8TopK(
-        corpusDf,
-        corpusDf.filter(col("vec_id") < 3)
-          .select(col("vec_id").as("query_id"), col("embedding")),
-        k = 5)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("topKStreamPq: code-broadcast streaming ADC matches the batch ADC fold bit-for-bit") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Similarity
-    val e = sources.Tables.load(spark, sfDir, "embeddings")
-      .select("vec_id", "embedding")
-    val books = Similarity.pqCodebooks(e, subspaces = 4, subDim = 16,
-      codes = 8, iters = 1)
-      .select(col("sub"), col("centroid_id"), col("embedding"))
-      .as[(Int, Long, Array[Float])].collect().sortBy(x => (x._1, x._2))
-    val booksDf = books.toSeq.toDF("sub", "centroid_id", "embedding")
-    val cells = Similarity.pqEncode(e, booksDf, subDim = 16)
-    val codes = cells.groupBy("vec_id")
-      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-      .select(col("vec_id"),
-        expr("transform(sc, x -> cast(x.code as int))").as("codes"))
-      .as[(Long, Array[Int])].collect().sortBy(_._1)
-    val queryVecs = e.filter(col("vec_id") < 3).as[(Long, Array[Float])].collect()
-
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.topKStreamPq(input.toDS(), books, codes, k = 10)
-      .writeStream.format("memory").queryName("tws_topk_pq").outputMode("append")
-      .start()
-    try {
-      input.addData(queryVecs.toSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("tws_topk_pq")
-        .orderBy("query_id", "rank")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(col("adc").desc, col("vec_id"))
-      val ref = Similarity.pqAdcScores(cells,
-        e.filter(col("vec_id") < 3)
-          .select(col("vec_id").as("query_id"), col("embedding")),
-        booksDf, subDim = 16)
-        .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
-        .select("query_id", "rank", "vec_id", "adc")
-        .orderBy("query_id", "rank")
-        .as[(Long, Int, Long, Double)].collect().toSeq
-      // same double-add order on both paths ⇒ exact equality, scores included
-      assert(streamed === ref)
-    } finally q.stop()
-  }
-
-  test("topKStreamIvf: cell-pruned streaming probe matches the batch IVF path") {
+  test("batch ivfTopK per micro-batch in foreachBatch equals ivfTopK over all queries") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
     val corpusDf = sources.Tables.load(spark, sfDir, "embeddings")
       .select("vec_id", "embedding")
     val centroidsDf = Similarity.kmeansCentroids(corpusDf, k = 4, iters = 2)
-    val (cents, cells) = Similarity.collectCells(corpusDf, centroidsDf)
-    val queryVecs = corpusDf.as[(Long, Array[Float])].collect().filter(_._1 < 3)
+    val queryVecs = corpusDf.filter(col("vec_id") < 6)
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
 
+    // the corpus stays a static frame: each micro-batch joins it, nothing
+    // of it is collected to the driver
+    val hits = scala.collection.mutable.ArrayBuffer[(Long, Int, Long)]()
     val input = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.topKStreamIvf(input.toDS(), cents, cells, k = 5, nprobe = 2)
-      .writeStream.format("memory").queryName("tws_topk_ivf").outputMode("append")
+    val q = input.toDS().writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[(Long, Array[Float])], _: Long) =>
+        val topk = Similarity.ivfTopK(corpusDf, batch.toDF("query_id", "embedding"),
+          centroidsDf, k = 5, nprobe = 2)
+        hits.synchronized {
+          hits ++= topk.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+        }
+        ()
+      }
       .start()
     try {
-      input.addData(queryVecs.toSeq)
+      input.addData(queryVecs.take(3).toSeq)
       q.processAllAvailable()
-      val streamed = spark.table("tws_topk_ivf")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val batch = Similarity.ivfTopK(
-        corpusDf,
-        corpusDf.filter(col("vec_id") < 3)
-          .select(col("vec_id").as("query_id"), col("embedding")),
-        centroidsDf, k = 5, nprobe = 2)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("topKStreamJoin: distributed cell-join probe matches the collected-index probe") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Similarity
-    val corpusDf = sources.Tables.load(spark, sfDir, "embeddings")
-      .select("vec_id", "embedding")
-    val centroidsDf = Similarity.kmeansCentroids(corpusDf, k = 4, iters = 2)
-    val (cents, cells) = Similarity.collectCells(corpusDf, centroidsDf)
-    // the distributed probe's corpus side: a static cell-keyed FRAME —
-    // never collected to the driver (the broadcast is centroids only)
-    val corpusCells = Similarity.assignToCentroids(corpusDf, centroidsDf)
-      .select(col("centroid_id"), col("vec_id"), col("embedding"))
-    val queryVecs = corpusDf.as[(Long, Array[Float])].collect().filter(_._1 < 3)
-
-    val refInput = MemoryStream[(Long, Array[Float])]
-    val refQ = Similarity.topKStreamIvf(refInput.toDS(), cents, cells, k = 5, nprobe = 2)
-      .writeStream.format("memory").queryName("twsj_ref").outputMode("append")
-      .start()
-    val expected = try {
-      refInput.addData(queryVecs.toSeq)
-      refQ.processAllAvailable()
-      spark.table("twsj_ref")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    } finally refQ.stop()
-
-    val collected = scala.collection.mutable.Set[(Long, Int, Long)]()
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.topKStreamJoin(input.toDS(), corpusCells, cents,
-      sink = (topk, _) => collected.synchronized {
-        collected ++= topk.collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      }, k = 5, nprobe = 2)
-    try {
-      input.addData(queryVecs.toSeq)
+      input.addData(queryVecs.drop(3).toSeq)
       q.processAllAvailable()
-      assert(collected.toSet === expected)
-      assert(collected.nonEmpty)
+      val batch = Similarity.ivfTopK(corpusDf,
+        queryVecs.toSeq.toDF("query_id", "embedding"), centroidsDf, k = 5, nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+      assert(hits.nonEmpty)
+      assert(hits.sorted === batch.toSeq.sorted)
     } finally q.stop()
   }
 
