@@ -62,13 +62,13 @@ object StreamingPipeline {
     * schema-on-read semantics, the reference's
     * ci_cd/ksql/create_stream.json:2).
     *
-    * The parse is `DecodeJsonPayload`: `from_json`'s parser, fed each
-    * payload as a `String` rather than through a per-row
-    * `InputStreamReader`. Binary payloads (Kafka's `value`) are cast to
-    * string and decoded as UTF-8 with replacement, exactly as `from_json`
-    * decodes them; Jackson's byte-array parser is not used because it
-    * detects the encoding itself and so reads invalid UTF-8, a BOM or
-    * UTF-16 bytes differently. The optimizer rule `PruneJsonPayloadFields`
+    * The parse is `DecodeJsonPayload`, which returns what `from_json`
+    * returns: flat records are read on a Jackson token fast path (the
+    * byte-array parser only for payloads of bytes 0x01-0x7F), and every
+    * other payload goes to `from_json`'s own parser, fed as a `String`.
+    * Binary payloads (Kafka's `value`) are cast to string and decoded as
+    * UTF-8 with replacement, exactly as `from_json` decodes them. The
+    * optimizer rule `PruneJsonPayloadFields`
     * then narrows the parse to the fields the query reads: the reference
     * changelog parses `srch_ci`, `srch_co` and `hotel_id` only.
     *

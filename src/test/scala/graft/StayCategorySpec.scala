@@ -57,6 +57,22 @@ class StayCategorySpec extends SparkSpec {
     assert(got.count() == 0, got.collect().mkString(";"))
   }
 
+  test("lenientDate's replace normalizes as translate did, null included") {
+    val inputs = Seq("2020/03/04", "2020/03-04", "//", "", "Zürich/東京 😀", null)
+    val got = inputs.toDF("s").select(
+      replace(col("s"), lit("/"), lit("-")).as("replaced"),
+      translate(col("s"), "/", "-").as("translated"),
+      StayCategory.lenientDate(col("s")).as("parsed"),
+      try_to_date(translate(col("s"), "/", "-")).as("parsedBefore"))
+      .collect().toSeq
+    assert(got.map(_.getString(0)) == got.map(_.getString(1)))
+    assert(got.map(_.get(2)) == got.map(_.get(3)))
+    assert(got.map(_.getString(0)) ==
+      Seq("2020-03-04", "2020-03-04", "--", "", "Zürich-東京 😀", null))
+    assert(got.map(r => Option(r.get(2)).map(_.toString)) ==
+      Seq(Some("2020-03-04"), Some("2020-03-04"), None, None, None, None))
+  }
+
   test("category domain is exactly the 5 reference values") {
     assert(StayCategory.domain.toSet == Set(
       "Erroneous data", "Short stay", "Standard stay",

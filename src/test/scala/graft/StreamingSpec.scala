@@ -170,10 +170,11 @@ class StreamingSpec extends SparkSpec {
   /** The payloads as a file-backed binary `value` column. File-backed on
     * purpose: a LocalRelation is folded at optimization time and its plan
     * would show no parse at all. */
-  private def stagedPayloads(): org.apache.spark.sql.DataFrame = {
+  private def stagedPayloads(
+      payloads: Seq[Option[Array[Byte]]] = wirePayloads): org.apache.spark.sql.DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_decode")
       .resolve("payloads").toString
-    wirePayloads.toDF("value").coalesce(1).write.parquet(dir)
+    payloads.toDF("value").coalesce(1).write.parquet(dir)
     spark.read.parquet(dir)
   }
 
@@ -262,6 +263,111 @@ class StreamingSpec extends SparkSpec {
     }
     assert(pruned == ((sortedRows(ref.select(read.map(col): _*)),
       sortedRows(StreamingPipeline.hotelsCount(StreamingPipeline.enrich(ref))))))
+  }
+
+  /** Random payloads around the decode's fast path: shuffled field order,
+    * whitespace, unknown nested fields, nulls, duplicate keys, boundary and
+    * mistyped numbers, numbers for strings, truncation and trailing
+    * content. */
+  private def randomPayloads(n: Int, seed: Long): Seq[Option[Array[Byte]]] = {
+    val r = new scala.util.Random(seed)
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+    def pick[T](xs: T*): T = xs(r.nextInt(xs.length))
+    def ws(): String = if (r.nextInt(4) == 0) pick(" ", "\n", "\t ", "  \r\n") else ""
+    val numbers = Seq("0", "-0", "7", "2234.2641", "1e3", "1.0", "-2.5E-3", "\"12\"", "true",
+      "false", "[1]", "{}",
+      (Int.MaxValue - 1L).toString, Int.MaxValue.toString, (Int.MaxValue + 1L).toString,
+      (Int.MinValue - 1L).toString, Int.MinValue.toString, (Int.MinValue + 1L).toString,
+      (Long.MaxValue - 1L).toString, Long.MaxValue.toString, (BigInt(Long.MaxValue) + 1).toString,
+      (BigInt(Long.MinValue) - 1).toString, Long.MinValue.toString, (Long.MinValue + 1L).toString)
+    val strings = Seq("\"2017-08-01\"", "\"2017/08/05\"", "\"\"", "\"a\\\"b\"",
+      "\"\\u00e9t\\u00e9\"", "\"Zürich\"", "42", "1.5", "true", "[\"x\"]")
+    val unknown = Seq("\"extra\":{\"a\":[1,2,{\"b\":null}],\"c\":\"x\"}", "\"u\":[1,\"2\"]",
+      "\"z\":\"s\"", "\"HOTEL_ID\":5", "\"n\":null")
+    def value(f: org.apache.spark.sql.types.StructField): String =
+      if (r.nextInt(10) == 0) "null"
+      else f.dataType match {
+        case LongType | IntegerType | DoubleType =>
+          if (r.nextInt(3) == 0) pick(numbers: _*) else r.nextInt(100000).toString
+        case _ =>
+          if (r.nextInt(3) == 0) pick(strings: _*) else s"\"2020-0${1 + r.nextInt(9)}-1${r.nextInt(10)}\""
+      }
+    val fields = StreamingPipeline.expediaSchema.fields.toSeq
+    (1 to n).map { _ =>
+      val kept = r.shuffle(fields).take(r.nextInt(fields.length + 1))
+      val dups = if (r.nextInt(5) == 0) Seq(pick(fields: _*)) else Nil
+      val members = r.shuffle(
+        (kept ++ dups).map(f => s"${ws()}\"${f.name}\"${ws()}:${ws()}${value(f)}") ++
+          (if (r.nextInt(4) == 0) Seq(pick(unknown: _*)) else Nil))
+      val obj = ws() + "{" + members.mkString(",") + ws() + "}" + ws()
+      val text = r.nextInt(20) match {
+        case 0 => obj.take(r.nextInt(obj.length))
+        case 1 => obj + pick(" x", "}", "{}", "[]", "null", ",")
+        case _ => obj
+      }
+      Some(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  test("fromJsonPayload: randomized payloads decode as from_json does, pruned and whole") {
+    val payloads = randomPayloads(2500, seed = 20261019L)
+    val decode = org.apache.spark.sql.graft.DecodeJsonPayload(
+      org.apache.spark.sql.catalyst.expressions.Literal(""), StreamingPipeline.expediaSchema,
+      Some("UTC"))
+    val fast = payloads.flatten.count(p =>
+      decode.decodeFlat(org.apache.spark.unsafe.types.UTF8String.fromBytes(p)) != null)
+    // both paths are exercised
+    assert(fast > payloads.size / 10 && fast < payloads.size * 9 / 10, fast)
+    val raw = stagedPayloads(payloads)
+    val ref = fromJsonReference(raw)
+    val whole = StreamingPipeline.fromJsonPayload(raw)
+    assert(decodedFields(whole).map(_.size) == Seq(20))
+    assert(sortedRows(whole) == sortedRows(ref))
+    val read = Seq("srch_ci", "srch_co", "hotel_id")
+    val pruned = StreamingPipeline.fromJsonPayload(raw).select(read.map(col): _*)
+    assert(decodedFields(pruned) == Seq(read))
+    assert(sortedRows(pruned) == sortedRows(ref.select(read.map(col): _*)))
+  }
+
+  test("fromJsonPayload: flat payloads take the fast path, the edge cases fall back") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.DecodeJsonPayload
+    import org.apache.spark.unsafe.types.UTF8String
+    val whole = DecodeJsonPayload(Literal(""), StreamingPipeline.expediaSchema, Some("UTC"))
+    val read = Seq("srch_ci", "srch_co", "hotel_id")
+    val pruned = DecodeJsonPayload(Literal(""),
+      org.apache.spark.sql.types.StructType(read.map(StreamingPipeline.expediaSchema(_))),
+      Some("UTC"))
+    // shaped like perfbench's PayloadGen line
+    val generated = """{"id": 7, "date_time": "2017-07-30 12:37:10", "site_name": 2, """ +
+      """"posa_container": 3, "user_location_country": 66, "user_location_region": 348, """ +
+      """"user_location_city": 48862, "orig_destination_distance": 2234.26, """ +
+      """"user_id": 12, "is_mobile": 0, "is_package": 1, "channel": 9, """ +
+      """"srch_ci": "2017/08/01", "srch_co": "2017-08-05", "srch_adults_cnt": 2, """ +
+      """"srch_children_cnt": 0, "srch_rm_cnt": 1, "srch_destination_id": 8250, """ +
+      """"srch_destination_type_id": 1, "hotel_id": 2336462864384}"""
+    for (d <- Seq(whole, pruned)) {
+      val row = d.decodeFlat(UTF8String.fromString(generated))
+      assert(row != null && row.numFields == d.schema.length)
+      assert(row.getLong(d.schema.fieldIndex("hotel_id")) == 2336462864384L)
+    }
+    // the wire fixtures whose every token the fast path converts itself;
+    // every other fixture must reach Spark's parser
+    val flat = Set("{}", """{"id":4,"hotel_id":40,"extra":"x"}""",
+      """{"id":13,"hotel_id":130,"hotel_id":131,"srch_ci":"2020-01-01","srch_ci":"2020-02-01","srch_co":"2020-02-03"}""",
+      "{\"id\":27,\"date_time\":\"a\\tb\\u0001\",\"hotel_id\":270}",
+      """{"id":28,"extra":{"a":[1,2,{"b":null}]},"hotel_id":280}""",
+      """{"HOTEL_ID":29,"Srch_ci":"2020-01-01"}""",
+      " \n {\"id\":30,\"hotel_id\":300} \r\n")
+    val text = wirePayloads.flatten.map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
+    assert(text.count(_.startsWith("{\"id\":1,\"date_time\"")) == 1)
+    val taken = wirePayloads.flatten.zip(text).map { case (p, s) =>
+      s -> (whole.decodeFlat(UTF8String.fromBytes(p)) != null)
+    }
+    val expected = text.map(s => s -> (flat(s) || s.startsWith("{\"id\":1,\"date_time\"") ||
+      s.contains("Zürich") || s.contains("\"id\":40,") || s.contains("\"id\":41,")))
+    assert(taken == expected)
+    assert(flat.forall(text.contains))
   }
 
   test("batch ivfTopK per micro-batch in foreachBatch equals ivfTopK over all queries") {
