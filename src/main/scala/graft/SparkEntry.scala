@@ -715,8 +715,12 @@ object SparkEntry {
   /** One per implemented operator from SURVEY.md §2 — composed from the
     * per-family registration files under graft/entry/ (names are disjoint
     * across families; EntryCompositionSpec pins the exact name set: the
-    * round-10 names plus each later addition). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    * round-10 names plus each later addition). Lazy, not strict: the
+    * merge is built once instead of on every call, and a strict val would
+    * initialize the family objects in the middle of this object's own
+    * initialization, while the vals declared below it (curationGateCtes,
+    * …) are still null. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     EntryCore.queries ++
     EntryRelational.queries ++
     EntryBusiness.queries ++
@@ -1350,8 +1354,9 @@ object SparkEntry {
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = oracleSqlBase +
+    * the same parquet tables. Omit for non-SQL-expressible ops. Lazy for
+    * the reason given at `queries`. */
+  lazy val oracleSql: Map[String, String] = oracleSqlBase +
     // bloom prefilter + exact join ⇒ bit-identical to the index probe
     ("dedup_substring_bloom" -> oracleSqlBase("dedup_substring_index"))
 

@@ -593,8 +593,8 @@ private[graft] object EntryDedup {
       // EXACT shingle-Jaccard ≥ 0.7 ground truth, at t ∈ {8,10,12,14}
       // — the number a dedup operator owner reads before picking the
       // production threshold. Candidates come from the signature
-      // position self-join (k rows/doc), truth from the df-capped
-      // exact inverted index; both counts and the 0.7 cut are pure
+      // position self-join (k rows/doc), truth from the exact
+      // inverted index; both counts and the 0.7 cut are pure
       // integers (10c ≥ 7(na+nb−c)), so the confusion matrix is
       // engine-exact.
       // re-key the index read to session width (r16 opt): the shingle
@@ -613,10 +613,9 @@ private[graft] object EntryDedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val e2 = sigs.select(col("doc_id"),
         posexplode(col("sig")).as(Seq("j", "c")))
-      val est = e2.select(col("j"), col("c"), col("doc_id").as("id_a"))
-        .join(e2.select(col("j"), col("c"), col("doc_id").as("id_b")),
-          Seq("j", "c"))
-        .filter(col("id_a") < col("id_b"))
+      // both self-joins are uncapped: the calibration curve and its
+      // ground truth must see every pair, boilerplate included
+      val est = Dedup.sharedKeyPairs(e2, Seq("j", "c"), "doc_id", None)
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("m"))
         .filter(col("m") >= 8)
       val shd = sh.select(col("doc_id"),
@@ -624,23 +623,7 @@ private[graft] object EntryDedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val sizes = shd.select(col("doc_id"), size(col("shh")).cast("long").as("n"))
       val ex0 = shd.select(col("doc_id"), explode(col("shh")).as("h"))
-      // df ≥ 2 prefilter (r15 opt, the ngramJaccardPairs shape): a
-      // shingle held by one doc can never produce an id_a < id_b pair,
-      // so dropping the (dominant) unique-shingle tail before the
-      // self-join changes no `c` count while removing most of the
-      // shuffle; persisted because both join sides read it.
-      // LEFT SEMI with NO broadcast hint (ADVICE r15): `shared` is every
-      // distinct shingle hash held by 2+ docs — unbounded in corpus
-      // size, so a forced broadcast would exceed the 8 GB relation cap
-      // at scale. AQE still builds a broadcast semi join at runtime
-      // whenever the set actually fits.
-      val shared = ex0.groupBy("h").count()
-        .filter(col("count") >= 2).select("h")
-      val ex = ex0.join(shared, Seq("h"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val common = ex.select(col("h"), col("doc_id").as("id_a"))
-        .join(ex.select(col("h"), col("doc_id").as("id_b")), Seq("h"))
-        .filter(col("id_a") < col("id_b"))
+      val common = Dedup.sharedKeyPairs(ex0, Seq("h"), "doc_id", None)
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
       val truth = common
         .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")),

@@ -79,44 +79,40 @@ object Dedup {
         }: _*)).as(Seq("band", "band_key")))
   }
 
-  /** Candidate near-dup pairs from banded MinHash: same (band, band_key)
-    * bucket ⇒ candidate. Pairs deduped across bands. The self-join is on
-    * the bucket key, so work is Σ bucket² not n². */
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        shingleSize: Int = 3, bands: Int = 16,
-                        rowsPerBand: Int = 4,
-                        maxBucketSize: Int = 1000): DataFrame =
-    candidatesFromBuckets(
-      minhashBuckets(docs, idCol, textCol, shingleSize, bands, rowsPerBand),
-      idCol, maxBucketSize)
-
-  /** Bucket table → deduped candidate pairs: same (band, band_key) bucket ⇒
-    * candidate, so work is Σ bucket² not n². */
-  private def candidatesFromBuckets(buckets: DataFrame, idCol: String,
-                                    maxBucketSize: Int): DataFrame = {
-    // persist: both sides of the bucket self-join read this table; without
-    // it the shingle+minhash pipeline runs twice (at warehouse scale this
-    // table would be materialized to storage instead). The cache entry is
-    // released by the caller's session hygiene — Verify/Bench clearCache()
-    // between queries — because unpersisting here, before the consuming
-    // join materializes, would defeat the reuse.
-    val b = buckets
+  /** Pairs of documents that share a key of an inverted index — the one
+    * df-capped self-join every near-dup pair builder here runs on.
+    * `index` holds one row per (document, key) occurrence; `keys` name
+    * the (possibly composite) key columns. Only keys held by 2 to `maxDf`
+    * index rows take part: a key held by one row can never pair, and the
+    * upper cap bounds the self-join's Σdf² against boilerplate skew
+    * (`None` for no upper bound).
+    *
+    * The key band is applied as a LEFT SEMI with no broadcast hint: the
+    * set of keys in the band grows with the corpus, so a forced broadcast
+    * would hit the 8 GB relation cap at scale, while AQE still broadcasts
+    * it at runtime when it fits and falls back to a shuffle semi join
+    * when it does not. The capped index is persisted because both sides
+    * of the self-join read it; without the cache each side re-runs the
+    * index pipeline and the semi filter. The cache entry is released by
+    * the caller's session hygiene (Verify/Bench `clearCache()` between
+    * queries): unpersisting here, before the consuming join
+    * materializes, would defeat the reuse.
+    *
+    * Returns (keys…, id_a, carry_a…, id_b, carry_b…), one row per pair of
+    * occurrences with id_a < id_b: a document pair sharing several keys
+    * (or one key at several carried values) yields one row for each. */
+  private[graft] def sharedKeyPairs(index: DataFrame, keys: Seq[String],
+                                    idCol: String, maxDf: Option[Int],
+                                    carry: Seq[String] = Nil): DataFrame = {
+    val n = col("count")
+    val ok = index.groupBy(keys.map(col): _*).count()
+      .filter(maxDf.fold(n >= 2)(n.between(2, _)))
+      .select(keys.map(col): _*)
+    val capped = index.join(ok, keys, "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cap pathological buckets: boilerplate-heavy corpora put thousands of
-    // docs in one bucket and the self-join goes quadratic; such docs still
-    // pair up in their other (non-degenerate) bands
-    val ok = b.groupBy("band", "band_key").count()
-      .filter(col("count") <= maxBucketSize)
-      .select("band", "band_key")
-    // LEFT SEMI, no broadcast hint (ADVICE r15 pattern): the sane-bucket
-    // key set grows with the corpus — AQE broadcasts it at runtime only
-    // when it actually fits
-    val capped = b.join(ok, Seq("band", "band_key"), "left_semi")
-    val l = capped.select(col("band"), col("band_key"), col(idCol).as("id_a"))
-    val r = capped.select(col("band"), col("band_key"), col(idCol).as("id_b"))
-    l.join(r, Seq("band", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    def side(s: String) = capped.select(keys.map(col) ++
+      (col(idCol).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), keys).filter(col("id_a") < col("id_b"))
   }
 
   /** MinHash near-dup pairs with an exact n-gram Jaccard verify step over
@@ -155,7 +151,19 @@ object Dedup {
   def minhashPairsFromIndex(sh: DataFrame, buckets: DataFrame, idCol: String,
                             threshold: Double = 0.8,
                             maxBucketSize: Int = 1000): DataFrame = {
-    val cands = candidatesFromBuckets(buckets, idCol, maxBucketSize)
+    // persist: the bucket count and the capping semi join both read this
+    // table; without it the shingle+minhash pipeline runs twice (at
+    // warehouse scale this table would be materialized to storage instead)
+    val b = buckets
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // candidates: same (band, band_key) bucket, deduped across bands, so
+    // work is Σ bucket² not n². The cap drops pathological buckets:
+    // boilerplate-heavy corpora put thousands of docs in one bucket and
+    // the self-join goes quadratic; such docs still pair up in their
+    // other (non-degenerate) bands
+    val cands = sharedKeyPairs(b, Seq("band", "band_key"), idCol,
+        Some(maxBucketSize))
+      .select("id_a", "id_b").distinct()
     val shd = sh.select(col(idCol), array_distinct(col("hs")).as("sh"))
     jaccardOverShingleSets(cands, shd, idCol)
       .filter(col("jaccard") >= threshold)
@@ -193,14 +201,7 @@ object Dedup {
     val e = sh0.select(col(idCol),
       explode(HashFunctions.winnow(col("hs"), window)).as("p"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ok = e.groupBy("p").count()
-      .filter(col("count").between(2, maxPrintDf))
-      .select("p")
-    // LEFT SEMI, no hint (ADVICE r15 pattern): unbounded print-key set
-    val capped = e.join(ok, Seq("p"), "left_semi")
-    capped.select(col("p"), col(idCol).as("id_a"))
-      .join(capped.select(col("p"), col(idCol).as("id_b")), Seq("p"))
-      .filter(col("id_a") < col("id_b"))
+    sharedKeyPairs(e, Seq("p"), idCol, Some(maxPrintDf))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
@@ -237,18 +238,8 @@ object Dedup {
         HashFunctions.minhashFromHashes(col("hs"), k).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val e = sigs.select(col(idCol), posexplode(col("sig")).as(Seq("j", "c")))
-    // df=1 components can't match; the upper cap bounds boilerplate-heavy
-    // corpora exactly like the bucket caps elsewhere
-    val ok = e.groupBy("j", "c").count()
-      .filter(col("count").between(2, maxComponentDf))
-      .select("j", "c")
-    // LEFT SEMI, no hint (ADVICE r15 pattern): the (position, component)
-    // key set grows with the corpus hash domain
-    val capped = e.join(ok, Seq("j", "c"), "left_semi")
     val minMatches = math.ceil(minEstimate * k).toInt
-    capped.select(col("j"), col("c"), col(idCol).as("id_a"))
-      .join(capped.select(col("j"), col("c"), col(idCol).as("id_b")), Seq("j", "c"))
-      .filter(col("id_a") < col("id_b"))
+    sharedKeyPairs(e, Seq("j", "c"), idCol, Some(maxComponentDf))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("m"))
       .filter(col("m") >= minMatches)
       .withColumn("est_jaccard", round(col("m").cast("double") / k, 4))
@@ -301,38 +292,29 @@ object Dedup {
     * boilerplate shingles are the skew risk (cap via maxShingleDf). */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         shingleSize: Int = 3, threshold: Double = 0.5,
-                        maxShingleDf: Int = 100000): DataFrame = {
-    val sh = docs.select(
-      col(idCol),
-      array_distinct(hashedShingles(col(textCol), shingleSize)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sh.select(col(idCol), size(col("sh")).as("n"))
-    val e = sh.select(col(idCol), explode(col("sh")).as("h"))
-    // df = 1 shingles can never contribute a pair — dropping them before
-    // the self-join removes the (dominant) unique-shingle tail from the
-    // shuffle; the upper cap bounds Σ df² against boilerplate skew
-    val rare = e.groupBy("h").count()
-      .filter(col("count").between(2, maxShingleDf))
-      .select("h")
-    // persist the capped exploded index — both self-join sides read it
-    // (see containmentPairsFromShingles). LEFT SEMI with no broadcast
-    // hint (ADVICE r15): the df-band set is unbounded in corpus size —
-    // AQE broadcasts it at runtime when it fits, falls back to a
-    // shuffle semi join when it does not, instead of dying on the 8 GB
-    // broadcast cap.
-    val capped = e.join(rare, Seq("h"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val common = capped.select(col("h"), col(idCol).as("id_a"))
-      .join(capped.select(col("h"), col(idCol).as("id_b")), Seq("h"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("n").as("nb")), Seq("id_b"))
+                        maxShingleDf: Int = 100000): DataFrame =
+    sharedShingleCounts(
+      hashedShingleTable(docs, idCol, textCol, shingleSize), idCol, maxShingleDf)
       .withColumn("jaccard",
         col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+
+  /** (id, hs) shingle table → (id_a, id_b, c, na, nb): every doc pair
+    * sharing c > 0 distinct shingles of df ∈ [2, maxShingleDf], with the
+    * distinct-shingle counts na and nb of its two docs — the common core
+    * of the Jaccard and containment scores. */
+  private def sharedShingleCounts(sh0: DataFrame, idCol: String,
+                                  maxShingleDf: Int): DataFrame = {
+    val sh = sh0.select(col(idCol), array_distinct(col("hs")).as("sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = sh.select(col(idCol), size(col("sh")).as("n"))
+    val e = sh.select(col(idCol), explode(col("sh")).as("h"))
+    sharedKeyPairs(e, Seq("h"), idCol, Some(maxShingleDf))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
+      .join(sizes.select(col(idCol).as("id_a"), col("n").as("na")), Seq("id_a"))
+      .join(sizes.select(col(idCol).as("id_b"), col("n").as("nb")), Seq("id_b"))
+      .select("id_a", "id_b", "c", "na", "nb")
   }
 
   /** Per-cluster canonical election: for each cluster keep the member
@@ -375,33 +357,12 @@ object Dedup {
   /** `containmentPairs` over a precomputed (id, hs) shingle table. */
   def containmentPairsFromShingles(sh0: DataFrame, idCol: String,
                                    threshold: Double = 0.8,
-                                   maxShingleDf: Int = 100000): DataFrame = {
-    val sh = sh0.select(col(idCol), array_distinct(col("hs")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sh.select(col(idCol), size(col("sh")).as("n"))
-    val e = sh.select(col(idCol), explode(col("sh")).as("h"))
-    val rare = e.groupBy("h").count()
-      .filter(col("count").between(2, maxShingleDf))
-      .select("h")
-    // persist the CAPPED exploded index, not just the array table: both
-    // sides of the self-join consume it, and without the cache each side
-    // re-runs explode + semi-filter over the full shingle table. LEFT
-    // SEMI, no broadcast hint (ADVICE r15): the df-band set is unbounded
-    // in corpus size — AQE broadcasts at runtime only when it fits.
-    val capped = e.join(rare, Seq("h"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val common = capped.select(col("h"), col(idCol).as("id_a"))
-      .join(capped.select(col("h"), col(idCol).as("id_b")), Seq("h"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("n").as("nb")), Seq("id_b"))
+                                   maxShingleDf: Int = 100000): DataFrame =
+    sharedShingleCounts(sh0, idCol, maxShingleDf)
       .withColumn("containment",
         col("c").cast("double") / least(col("na"), col("nb")).cast("double"))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "containment")
-  }
 
   /** Connected components over an undirected near-dup edge list by
     * iterative min-label propagation: every node's label converges to the
@@ -748,42 +709,31 @@ object Dedup {
                      maxShingleDf: Int = 100000,
                      keepFirst: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // persisted: the df filter and the capped self-join both read it
+    // persisted: the df count and the capping semi join both read it
     val sh = docs.select(col(idCol).as("id"),
         posexplode(hashedShingles(col(textCol), shingleSize))
           .as(Seq("pos", "h")))
       .withColumn("pos", col("pos").cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // df ≥ 2 occurrences or the shingle can't match across docs; the cap
-    // bounds Σdf² against boilerplate skew (matches the other families)
-    // LEFT SEMI, no broadcast hint (ADVICE r15): unbounded df-band set —
-    // AQE broadcasts at runtime only when it fits
-    val shared = sh.groupBy("h").count()
-      .filter(col("count").between(2, maxShingleDf)).select("h")
-    // persist the CAPPED positional index (r16 opt, the ngramJaccard
-    // pattern): both self-join sides read it, and without the cache each
-    // side re-runs the posexplode + semi filter — the profiler showed
-    // the two sides racing as concurrent ~2.7 s materializations
-    val capped = sh.join(shared, Seq("h"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val matches = capped
-      .select(col("h"), col("id").as("id_a"), col("pos").as("pa"))
-      .join(capped.select(col("h"), col("id").as("id_b"), col("pos").as("pb")),
-        Seq("h"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("diff", col("pa") - col("pb"))
-    // gaps-and-islands: within a (pair, delta) group, consecutive pa
-    // values share (pa − row_number), so each island is one maximal run.
+    // the capped positional index is persisted inside sharedKeyPairs (r16
+    // opt): without the cache each self-join side re-runs the posexplode +
+    // semi filter — the profiler showed the two sides racing as
+    // concurrent ~2.7 s materializations
+    val matches = sharedKeyPairs(sh, Seq("h"), "id", Some(maxShingleDf),
+        carry = Seq("pos"))
+      .withColumn("diff", col("pos_a") - col("pos_b"))
+    // gaps-and-islands: within a (pair, delta) group, consecutive pos_a
+    // values share (pos_a − row_number), so each island is one maximal run.
     // (r16: a collect_list + array-fold variant of this step was
     // implemented, oracle-verified and REJECTED on measurement — the
     // ObjectHashAggregate's per-group array state more than doubled the
     // family's wall: spans 5.6 → 12.5 s, index 3.5 → 5.6 s; the sorted
     // window is the faster island builder here.)
-    val wRun = Window.partitionBy("id_a", "id_b", "diff").orderBy("pa")
+    val wRun = Window.partitionBy("id_a", "id_b", "diff").orderBy("pos_a")
     val runs = matches
-      .withColumn("grp", col("pa") - row_number().over(wRun))
+      .withColumn("grp", col("pos_a") - row_number().over(wRun))
       .groupBy("id_a", "id_b", "diff", "grp")
-      .agg(min("pa").as("run_start"), count(lit(1)).as("run_len"))
+      .agg(min("pos_a").as("run_start"), count(lit(1)).as("run_len"))
       .filter(col("run_len") >= minRun)
     // a run of m shingles starting at token p covers tokens [p, p+m+k−1)
     val spanEnd = col("run_start") + col("run_len") + lit(shingleSize - 1L)
@@ -1250,7 +1200,7 @@ object Dedup {
         VectorFunctions.hyperplaneSignature(col(vecCol), bits, b)): _*))
       .as(Seq("band", "band_key")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // same degenerate-bucket cap as simhashPairs/candidatesFromBuckets:
+    // same degenerate-bucket cap as simhashPairs/minhashPairsFromIndex:
     // a mass of identical embeddings would make one bucket quadratic
     val ok = allBanded.groupBy("band", "band_key").count()
       .filter(col("count") <= maxBucketSize)

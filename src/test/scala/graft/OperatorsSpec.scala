@@ -447,12 +447,37 @@ class OperatorsSpec extends SparkSpec {
     val degenerate = (1L to 60L)
       .map(i => (i, "the same boilerplate text repeated in every document here"))
       .toDF("doc_id", "text")
-    val capped = Dedup.minhashCandidates(degenerate, "doc_id", "text",
-      shingleSize = 2, bands = 16, rowsPerBand = 4, maxBucketSize = 10)
-    assert(capped.count() == 0)
-    val uncapped = Dedup.minhashCandidates(degenerate, "doc_id", "text",
-      shingleSize = 2, bands = 16, rowsPerBand = 4, maxBucketSize = 1000)
-    assert(uncapped.count() == 60L * 59 / 2)
+    val buckets = Dedup.minhashBuckets(degenerate, "doc_id", "text",
+      shingleSize = 2, bands = 16, rowsPerBand = 4)
+    def candidates(maxBucketSize: Int) =
+      Dedup.sharedKeyPairs(buckets, Seq("band", "band_key"), "doc_id",
+        Some(maxBucketSize)).select("id_a", "id_b").distinct()
+    assert(candidates(10).count() == 0)
+    assert(candidates(1000).count() == 60L * 59 / 2)
+  }
+
+  test("sharedKeyPairs: id_a < id_b pairs of the keys held by 2 to maxDf rows") {
+    // composite key (k1, k2); maxDf = 3. (1,x) and (3,y) are held by one
+    // row each, (2,y) by two, (3,z) by three — doc 4 holds it twice —
+    // and (4,w) by four. (3,y) shares k1 with (3,z) and k2 with (2,y), so
+    // a band counted on either column alone would change the answer.
+    val index = Seq(
+      (1L, 1, "x", 10), (2L, 2, "y", 20), (3L, 2, "y", 30),
+      (4L, 3, "z", 41), (4L, 3, "z", 42), (5L, 3, "z", 50),
+      (6L, 4, "w", 60), (7L, 4, "w", 70), (8L, 4, "w", 80), (9L, 4, "w", 90),
+      (2L, 3, "y", 21)).toDF("doc_id", "k1", "k2", "v")
+    def pairs(maxDf: Option[Int]) =
+      Dedup.sharedKeyPairs(index, Seq("k1", "k2"), "doc_id", maxDf,
+          carry = Seq("v"))
+        .select("k1", "k2", "id_a", "v_a", "id_b", "v_b")
+        .as[(Int, String, Long, Int, Long, Int)].collect().sorted.toSeq
+    assert(pairs(Some(3)) == Seq(
+      (2, "y", 2L, 20, 3L, 30),
+      (3, "z", 4L, 41, 5L, 50),
+      (3, "z", 4L, 42, 5L, 50)))
+    // no upper bound: the four-row key pairs up too
+    val w = for (a <- 6 to 9; b <- a + 1 to 9) yield (4, "w", a.toLong, a * 10, b.toLong, b * 10)
+    assert(pairs(None) == (pairs(Some(3)) ++ w).sorted)
   }
 
   test("simhashPairs: 10k identical docs complete with capped (zero) pair count") {
