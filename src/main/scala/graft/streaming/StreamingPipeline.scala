@@ -63,14 +63,17 @@ object StreamingPipeline {
     * ci_cd/ksql/create_stream.json:2).
     *
     * The parse is `DecodeJsonPayload`, which returns what `from_json`
-    * returns: flat records are read on a Jackson token fast path (the
-    * byte-array parser only for payloads of bytes 0x01-0x7F), and every
-    * other payload goes to `from_json`'s own parser, fed as a `String`.
-    * Binary payloads (Kafka's `value`) are cast to string and decoded as
-    * UTF-8 with replacement, exactly as `from_json` decodes them. The
-    * optimizer rule `PruneJsonPayloadFields`
-    * then narrows the parse to the fields the query reads: the reference
-    * changelog parses `srch_ci`, `srch_co` and `hotel_id` only.
+    * returns. A flat record is read by one validating pass over its bytes:
+    * it materializes only the schema's fields, takes strings without
+    * escapes in the bytes 0x20-0x7F and integers that fit, reads `-0` as
+    * 0.0 for a double (through the long, as `from_json` does), and
+    * validates every value it skips as Jackson does. Every other payload
+    * goes to `from_json`'s own parser, fed as a `String`. Binary payloads
+    * (Kafka's `value`) are cast to string and decoded as UTF-8 with
+    * replacement, exactly as `from_json` decodes them. The optimizer rule
+    * `PruneJsonPayloadFields` then narrows the parse to the fields the
+    * query reads: the reference changelog parses `srch_ci`, `srch_co` and
+    * `hotel_id` only.
     *
     * The parse sits in a one-element `explode` because Catalyst's
     * PushDownPredicates would otherwise copy it into the null filter

@@ -1,11 +1,11 @@
 package org.apache.spark.sql.graft
 
-import scala.collection.mutable
-import scala.util.control.NonFatal
+import java.nio.charset.StandardCharsets.{ISO_8859_1, US_ASCII, UTF_8}
+import java.util.Arrays
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
-import com.fasterxml.jackson.core.JsonParser.NumberType
-import com.fasterxml.jackson.core.JsonToken._
+import scala.collection.mutable
+
+import com.fasterxml.jackson.core.StreamReadConstraints
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
@@ -23,9 +23,8 @@ import org.apache.spark.sql.types.{
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `from_json(child, schema)` for a wire payload, decoded on a token fast
-  * path when the record is flat and plain, and by Spark's own parser
-  * otherwise.
+/** `from_json(child, schema)` for a wire payload, decoded by a byte scanner
+  * when the record is flat and plain, and by Spark's own parser otherwise.
   *
   * The slow path is exact by construction: the options, the
   * `JacksonParser` and the PERMISSIVE `FailureSafeParser` are the ones
@@ -39,25 +38,39 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The fast path (`decodeFlat`) applies when every field of `schema` is a
   * long, int, double or non-collated string, none is the corrupt-record
-  * column and none has an existence default. Per row it walks the tokens
-  * of one root object with a parser from the same `JsonFactory`, looks
-  * each field name up by exact case, skips unknown fields (a duplicate
-  * key's last value wins) and requires the end of input after the object.
-  * It accepts only the tokens whose conversion cannot fail: null for any
-  * field, an int or long that fits for `IntegerType` / `LongType`, any
-  * number for `DoubleType`, a string for `StringType`. Any other token,
-  * trailing content or exception sends the row to the slow path, which
-  * then returns exactly what `from_json` does. Jackson's byte-array parser
-  * is used only when every byte is in 0x01-0x7F: it detects the encoding
-  * from the bytes, which then reads as UTF-8 with the same chars as the
-  * `String`; a BOM, NUL, non-ASCII, invalid UTF-8 or UTF-16 payload is
-  * parsed from the `String`. Widen the accepted tokens only with a
-  * fixture row checked against `from_json` (StreamingSpec).
+  * column and none has an existence default. It makes one pass over the
+  * payload's bytes, in the way of Mison (Li et al., VLDB'17): one root
+  * object, then only whitespace (space, tab, CR, LF). Each field name is
+  * matched by its bytes against the schema, by exact case; a name with an
+  * escape, a control or a non-ASCII byte is not accepted. A field of the
+  * schema takes `null`, or else:
+  *  - a long or an int: an integer (no fraction, no exponent) that fits,
+  *    read from its digits;
+  *  - a double: any JSON number, read as Jackson reads it. An integer that
+  *    fits a long reads through the long, so `-0` gives 0.0, as it does in
+  *    `from_json`, where `Double.parseDouble("-0")` would give -0.0; any
+  *    other number through `Double.parseDouble` of its text;
+  *  - a string: one with no escape and only bytes 0x20-0x7F.
+  * A duplicate key's last value wins. Every other value is skipped and
+  * validated as Jackson's parser validates it under Spark's options:
+  * strings with well-formed escapes and no raw control byte (non-ASCII
+  * bytes are characters after the UTF-8 decode), JSON-grammar numbers,
+  * `true`, `false`, `null`, and nested objects and arrays.
   *
-  * The fast path skips what `JacksonParser` pays per row for features
-  * this schema does not use: the existence-default bitmask, the per-field
-  * filter check, the `FailureSafeParser` iterator and, for ASCII payloads,
-  * the copy into a `String` and the char parser's name canonicalization.
+  * Anything else sends the row to the slow path, which then returns
+  * exactly what `from_json` does: a single-quoted string or name, `NaN`
+  * and the other non-numeric numbers, a leading `+`, `.` or `0`, a
+  * comment, a trailing comma, trailing content, a BOM, NUL or UTF-16
+  * payload, a number, string, name or nesting depth that reaches the
+  * limits of Jackson's `StreamReadConstraints`, and any value of a schema
+  * field not listed above. Widen what the scanner accepts only with a
+  * fixture row checked against `from_json` (StreamingSpec's
+  * `wirePayloads`).
+  *
+  * The fast path skips what `JacksonParser` pays per row: the parser and
+  * its buffers, the name canonicalization of every field, the
+  * existence-default bitmask, the per-field filter check and the
+  * `FailureSafeParser` iterator.
   *
   * `PruneJsonPayloadFields` narrows `schema` to the fields a plan reads.
   */
@@ -93,11 +106,11 @@ case class DecodeJsonPayload(child: Expression, schema: StructType,
       options.parseMode, nullableSchema, options.columnNameOfCorruptRecord)
   }
 
-  /** The fast path's converter per ordinal, or null when `schema` is not
-    * eligible for it. */
-  @transient private lazy val kinds: Array[Int] = {
+  /** The fast path's scanner, or null when `schema` is not eligible for
+    * it. */
+  @transient private lazy val scanner: FlatScanner = {
     val names = schema.fieldNames
-    val kindOf = schema.fields.toSeq.map { f =>
+    val kinds = schema.fields.toSeq.map { f =>
       val plain = f.name != options.columnNameOfCorruptRecord &&
         !f.metadata.contains(ResolveDefaultColumns.EXISTS_DEFAULT_COLUMN_METADATA_KEY)
       f.dataType match {
@@ -109,58 +122,25 @@ case class DecodeJsonPayload(child: Expression, schema: StructType,
         case _ => -1
       }
     }
-    if (kindOf.contains(-1) || names.distinct.length != names.length) null
-    else kindOf.toArray
+    if (kinds.contains(-1) || names.distinct.length != names.length) null
+    else new FlatScanner(names, kinds.toArray,
+      options.buildJsonFactory().streamReadConstraints())
   }
-
-  @transient private lazy val ordinals: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]
-    schema.fieldNames.zipWithIndex.foreach { case (n, i) => m.put(n, i) }
-    m
-  }
-
-  @transient private lazy val factory: JsonFactory = options.buildJsonFactory()
 
   /** The record of a flat payload, or null when the row needs Spark's
-    * parser: an ineligible schema, an unexpected token, trailing content
-    * or any parse error. */
+    * parser: an ineligible schema or a payload the scanner does not
+    * accept. */
   def decodeFlat(json: UTF8String): InternalRow = {
-    val kinds = this.kinds
-    if (kinds == null) return null
-    val p = try jacksonParser(json) catch { case NonFatal(_) => return null }
-    try {
-      if (p.nextToken() != START_OBJECT) return null
-      val row = new GenericInternalRow(kinds.length)
-      var t = p.nextToken()
-      while (t == FIELD_NAME) {
-        val i = ordinals.get(p.currentName())
-        t = p.nextToken()
-        if (i == null) p.skipChildren()
-        else if (t == VALUE_NULL) row.setNullAt(i)
-        else {
-          val v = convert(kinds(i), t, p)
-          if (v == null) return null
-          row.update(i, v)
-        }
-        t = p.nextToken()
-      }
-      if (t != END_OBJECT || p.nextToken() != null) null else row
-    } catch {
-      case NonFatal(_) => null
-    } finally p.close()
-  }
-
-  /** Jackson's byte parser over the backing array when every byte is in
-    * 0x01-0x7F, the `String` parser otherwise. */
-  private def jacksonParser(json: UTF8String): JsonParser = json.getBaseObject match {
-    case bytes: Array[Byte] =>
-      val from = (json.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt
-      val until = from + json.numBytes
-      var i = from
-      while (i < until && bytes(i) > 0) i += 1
-      if (i == until) factory.createParser(bytes, from, json.numBytes)
-      else factory.createParser(json.toString)
-    case _ => factory.createParser(json.toString)
+    val scanner = this.scanner
+    if (scanner == null) null
+    else json.getBaseObject match {
+      case bytes: Array[Byte] =>
+        val from = (json.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt
+        scanner.record(bytes, from, from + json.numBytes)
+      case _ =>
+        val bytes = json.getBytes
+        scanner.record(bytes, 0, bytes.length)
+    }
   }
 
   override protected def nullSafeEval(json: Any): Any = {
@@ -181,19 +161,264 @@ object DecodeJsonPayload {
   private val DoubleKind = 2
   private val StringKind = 3
 
-  /** The value of the current token for a field of `kind`, or null when
-    * Spark's converter could fail or would read the token otherwise. */
-  private def convert(kind: Int, t: JsonToken, p: JsonParser): Any = kind match {
-    case LongKind if t == VALUE_NUMBER_INT && p.getNumberType != NumberType.BIG_INTEGER =>
-      p.getLongValue
-    case IntKind if t == VALUE_NUMBER_INT && p.getNumberType == NumberType.INT =>
-      p.getIntValue
-    case DoubleKind if t == VALUE_NUMBER_INT || t == VALUE_NUMBER_FLOAT =>
-      p.getDoubleValue
-    case StringKind if t == VALUE_STRING =>
-      UTF8String.fromString(p.getText)
-    case _ => null
+  /** A scan position that marks a payload the scanner does not accept. */
+  private val Fail = -1
+
+  private val True = "true".getBytes(US_ASCII)
+  private val False = "false".getBytes(US_ASCII)
+  private val Null = "null".getBytes(US_ASCII)
+  private val LongMax = Long.MaxValue.toString.getBytes(US_ASCII)
+  private val LongMinAbs = Long.MinValue.toString.substring(1).getBytes(US_ASCII)
+
+  /** One pass over the bytes of a flat payload for the fields `names` of
+    * `kinds`. Each scan method takes the position of its first byte and
+    * returns the position after what it read, or `Fail`. Every depth and
+    * every number, string and name length the scanner accepts stays below
+    * `limits`, so Jackson would not reject it either (Spark's factory sets
+    * no document-length or token-count limit). */
+  private final class FlatScanner(names: Array[String], kinds: Array[Int],
+                                  limits: StreamReadConstraints) {
+    private val maxDepth = limits.getMaxNestingDepth
+    private val maxNumber = limits.getMaxNumberLength
+    private val maxString = limits.getMaxStringLength
+    private val maxName = limits.getMaxNameLength
+
+    private val nameBytes = names.map(_.getBytes(UTF_8))
+    /** Open addressing on `hash` of the name bytes: ordinal + 1, 0 when
+      * empty. */
+    private val slots: Array[Int] = {
+      val s = new Array[Int](Integer.highestOneBit(names.length * 2 + 1) << 1)
+      nameBytes.indices.foreach { o =>
+        var i = hash(nameBytes(o), 0, nameBytes(o).length) & (s.length - 1)
+        while (s(i) != 0) i = (i + 1) & (s.length - 1)
+        s(i) = o + 1
+      }
+      s
+    }
+
+    private def hash(b: Array[Byte], from: Int, until: Int): Int = {
+      var h = 0
+      var i = from
+      while (i < until) { h = 31 * h + b(i); i += 1 }
+      h
+    }
+
+    /** The ordinal of the name b[from, until) of hash `h`, or -1. */
+    private def ordinal(b: Array[Byte], from: Int, until: Int, h: Int): Int = {
+      var i = h & (slots.length - 1)
+      while (slots(i) != 0) {
+        val n = nameBytes(slots(i) - 1)
+        if (Arrays.equals(n, 0, n.length, b, from, until)) return slots(i) - 1
+        i = (i + 1) & (slots.length - 1)
+      }
+      -1
+    }
+
+    /** The record of the one object in b[from, until), or null. */
+    def record(b: Array[Byte], from: Int, until: Int): InternalRow = {
+      var i = ws(b, from, until)
+      if (i >= until || b(i) != '{') return null
+      val row = new GenericInternalRow(kinds.length)
+      i = ws(b, i + 1, until)
+      if (i < until && b(i) == '}') i += 1
+      else {
+        var more = true
+        while (more) {
+          if (i >= until || b(i) != '"') return null
+          val start = i + 1
+          var h = 0
+          i = start
+          while (i < until && b(i) != '"') {
+            val c = b(i)
+            if (c < 0x20 || c == '\\') return null // also every non-ASCII byte
+            h = 31 * h + c // `hash`, computed while the name is scanned
+            i += 1
+          }
+          if (i >= until || i - start >= maxName) return null
+          val o = ordinal(b, start, i, h)
+          i = ws(b, i + 1, until)
+          if (i >= until || b(i) != ':') return null
+          i = ws(b, i + 1, until)
+          i = if (o < 0) skip(b, i, until) else read(b, i, until, row, o)
+          if (i < 0) return null
+          i = ws(b, i, until)
+          if (i >= until || (b(i) != ',' && b(i) != '}')) return null
+          more = b(i) == ','
+          i = ws(b, i + 1, until)
+        }
+      }
+      if (ws(b, i, until) == until) row else null
+    }
+
+    /** Reads the value at i into field `o` of `row`. */
+    private def read(b: Array[Byte], i: Int, until: Int, row: GenericInternalRow, o: Int): Int = {
+      if (i >= until) return Fail
+      val c = b(i)
+      if (c == 'n') {
+        val j = literal(b, i, until, Null)
+        if (j > 0) row.setNullAt(o)
+        j
+      } else if (kinds(o) == StringKind) {
+        if (c != '"') return Fail
+        var j = i + 1
+        while (j < until && b(j) >= 0x20 && b(j) != '"' && b(j) != '\\') j += 1
+        if (j >= until || b(j) != '"' || j - i - 1 >= maxString) return Fail
+        row.update(o, UTF8String.fromBytes(b, i + 1, j - i - 1))
+        j + 1
+      } else {
+        val j = number(b, i, until)
+        if (j < 0) return Fail
+        val neg = c == '-'
+        val int = if (neg) i + 1 else i
+        if (digits(b, int, j) == j && fitsLong(b, int, j, neg)) {
+          var v = 0L // negated, so that Long.MinValue fits
+          var k = int
+          while (k < j) { v = v * 10 - (b(k) - '0'); k += 1 }
+          if (!neg) v = -v
+          kinds(o) match {
+            case LongKind => row.setLong(o, v)
+            case IntKind => if (v.toInt != v) return Fail else row.setInt(o, v.toInt)
+            case _ => row.setDouble(o, v.toDouble)
+          }
+        } else if (kinds(o) == DoubleKind) {
+          row.setDouble(o, java.lang.Double.parseDouble(new String(b, i, j - i, ISO_8859_1)))
+        } else return Fail
+        j
+      }
+    }
+
+    /** Skips the value at i, in a field of the root object, validating it
+      * as Jackson does. Containers are tracked on a stack of their closing
+      * bytes, so the depth costs no recursion. */
+    private def skip(b: Array[Byte], from: Int, until: Int): Int = {
+      var closers: Array[Byte] = null
+      var open = 0
+      var i = from
+      var atValue = true
+      while (i >= 0 && (atValue || open > 0)) {
+        if (atValue) {
+          if (i >= until) return Fail
+          val c = b(i)
+          if (c == '{' || c == '[') {
+            // the root object is depth 1
+            if (open + 2 >= maxDepth) return Fail
+            if (closers == null) closers = new Array[Byte](maxDepth)
+            closers(open) = (if (c == '{') '}' else ']').toByte
+            open += 1
+            i = ws(b, i + 1, until)
+            if (i < until && b(i) == closers(open - 1)) {
+              open -= 1
+              i += 1
+              atValue = false
+            } else if (c == '{') i = name(b, i, until)
+          } else {
+            i = scalar(b, i, until)
+            atValue = false
+          }
+        } else {
+          i = ws(b, i, until)
+          if (i >= until) return Fail
+          if (b(i) == closers(open - 1)) {
+            open -= 1
+            i += 1
+          } else if (b(i) == ',') {
+            i = ws(b, i + 1, until)
+            if (closers(open - 1) == '}') i = name(b, i, until)
+            atValue = true
+          } else return Fail
+        }
+      }
+      i
+    }
+
+    /** A member name of a nested object and its colon: the position of the
+      * member's value. */
+    private def name(b: Array[Byte], i: Int, until: Int): Int = {
+      if (i >= until || b(i) != '"') return Fail
+      val j = string(b, i, until, maxName)
+      if (j < 0) return Fail
+      val k = ws(b, j, until)
+      if (k >= until || b(k) != ':') Fail else ws(b, k + 1, until)
+    }
+
+    private def scalar(b: Array[Byte], i: Int, until: Int): Int = b(i) match {
+      case '"' => string(b, i, until, maxString)
+      case 't' => literal(b, i, until, True)
+      case 'f' => literal(b, i, until, False)
+      case 'n' => literal(b, i, until, Null)
+      case _ => number(b, i, until)
+    }
+
+    /** A string with well-formed escapes and no raw control byte, shorter
+      * than `max` bytes. */
+    private def string(b: Array[Byte], i: Int, until: Int, max: Int): Int = {
+      var j = i + 1
+      while (j < until) {
+        val c = b(j)
+        if (c == '"') return if (j - i - 1 >= max) Fail else j + 1
+        if (c == '\\') {
+          j += 1
+          if (j >= until) return Fail
+          b(j) match {
+            case '"' | '\\' | '/' | 'b' | 'f' | 'n' | 'r' | 't' =>
+            case 'u' =>
+              if (until - j <= 4) return Fail
+              var k = j + 1
+              while (k <= j + 4) {
+                if (Character.digit(b(k), 16) < 0) return Fail
+                k += 1
+              }
+              j += 4
+            case _ => return Fail
+          }
+        } else if (c >= 0 && c < 0x20) return Fail
+        j += 1
+      }
+      Fail
+    }
+
+    /** A JSON number: -?(0|[1-9][0-9]*)(.[0-9]+)?([eE][+-]?[0-9]+)?, shorter
+      * than Jackson's number limit. */
+    private def number(b: Array[Byte], i: Int, until: Int): Int = {
+      val int = if (i < until && b(i) == '-') i + 1 else i
+      var j = digits(b, int, until)
+      if (j == int || (b(int) == '0' && j > int + 1)) return Fail
+      if (j < until && b(j) == '.') {
+        val k = digits(b, j + 1, until)
+        if (k == j + 1) return Fail
+        j = k
+      }
+      if (j < until && (b(j) == 'e' || b(j) == 'E')) {
+        var k = j + 1
+        if (k < until && (b(k) == '+' || b(k) == '-')) k += 1
+        j = digits(b, k, until)
+        if (j == k) return Fail
+      }
+      if (j - i >= maxNumber) Fail else j
+    }
   }
+
+  private def ws(b: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    while (i < until && (b(i) == ' ' || b(i) == '\n' || b(i) == '\r' || b(i) == '\t')) i += 1
+    i
+  }
+
+  private def digits(b: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    while (i < until && b(i) >= '0' && b(i) <= '9') i += 1
+    i
+  }
+
+  private def literal(b: Array[Byte], i: Int, until: Int, word: Array[Byte]): Int =
+    if (until - i >= word.length && Arrays.equals(b, i, i + word.length, word, 0, word.length))
+      i + word.length
+    else Fail
+
+  /** Whether the digits b[from, until), with no leading zero, fit a long. */
+  private def fitsLong(b: Array[Byte], from: Int, until: Int, neg: Boolean): Boolean =
+    until - from < 19 || until - from == 19 &&
+      Arrays.compare(b, from, until, if (neg) LongMinAbs else LongMax, 0, 19) <= 0
 }
 
 /** Parses only the payload fields a plan reads.

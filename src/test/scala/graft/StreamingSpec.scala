@@ -145,7 +145,34 @@ class StreamingSpec extends SparkSpec {
       """{"id":28,"extra":{"a":[1,2,{"b":null}]},"hotel_id":280}""",
       """{"HOTEL_ID":29,"Srch_ci":"2020-01-01"}""",
       // whitespace around the object
-      " \n {\"id\":30,\"hotel_id\":300} \r\n")
+      " \n {\"id\":30,\"hotel_id\":300} \r\n",
+      // -0 reads as 0.0 for a DOUBLE (through the long), -0.0 as -0.0
+      """{"id":50,"orig_destination_distance":-0,"hotel_id":500}""",
+      """{"id":51,"orig_destination_distance":-0.0,"hotel_id":510}""",
+      // the long boundaries in a read LONG
+      s"""{"id":52,"hotel_id":${Long.MaxValue - 1}}""",
+      s"""{"id":53,"hotel_id":${Long.MaxValue}}""",
+      s"""{"id":54,"hotel_id":${BigInt(Long.MaxValue) + 1}}""",
+      s"""{"id":55,"hotel_id":${BigInt(Long.MinValue) - 1}}""",
+      s"""{"id":56,"hotel_id":${Long.MinValue}}""",
+      s"""{"id":57,"hotel_id":${Long.MinValue + 1}}""",
+      // past Jackson's limits in an unread field: a 1,001-digit number,
+      // and arrays nested to depth 1,002
+      s"""{"id":58,"user_id":1${"0" * 1000},"hotel_id":580}""",
+      s"""{"id":59,"extra":${"[" * 1001}${"]" * 1001},"hotel_id":590}""",
+      // an escaped name that Jackson reads as a read field
+      "{\"id\":60,\"hotel\\u005fid\":600}",
+      // single quotes and a non-numeric number, both on in Spark's options
+      """{"id":61,'hotel_id':610,"srch_ci":'2020-01-01'}""",
+      """{"id":62,"date_time":'x',"hotel_id":620}""",
+      """{"id":63,"orig_destination_distance":NaN,"hotel_id":630}""",
+      // numbers outside the JSON grammar, a trailing comma, a comment
+      """{"id":64,"hotel_id":007}""",
+      """{"id":65,"hotel_id":+1}""",
+      """{"id":66,"orig_destination_distance":.5,"hotel_id":660}""",
+      """{"id":67,"orig_destination_distance":1.,"hotel_id":670}""",
+      """{"id":68,"hotel_id":680,}""",
+      """{"id":69,/* c */"hotel_id":690}""")
       .map(_.getBytes(UTF_8))
     val bytes = Seq(
       // invalid UTF-8 inside a read field, and inside an unread one
@@ -181,10 +208,10 @@ class StreamingSpec extends SparkSpec {
   /** The built-in reference: the former two-parse form, whose null filter
     * on the parsed struct Catalyst pushes below the projection as a
     * second `from_json`. */
-  private def fromJsonReference(raw: org.apache.spark.sql.DataFrame) = raw
+  private def fromJsonReference(raw: org.apache.spark.sql.DataFrame,
+      schema: org.apache.spark.sql.types.StructType = StreamingPipeline.expediaSchema) = raw
     .filter(col("value").isNotNull)
-    .select(from_json(col("value").cast("string"),
-      StreamingPipeline.expediaSchema).as("r"))
+    .select(from_json(col("value").cast("string"), schema).as("r"))
     .filter(col("r").isNotNull)
     .select("r.*")
 
@@ -351,23 +378,156 @@ class StreamingSpec extends SparkSpec {
       assert(row != null && row.numFields == d.schema.length)
       assert(row.getLong(d.schema.fieldIndex("hotel_id")) == 2336462864384L)
     }
-    // the wire fixtures whose every token the fast path converts itself;
-    // every other fixture must reach Spark's parser
+    // the wire fixtures whose every value the fast path reads or skips
+    // itself; every other fixture must reach Spark's parser
     val flat = Set("{}", """{"id":4,"hotel_id":40,"extra":"x"}""",
       """{"id":13,"hotel_id":130,"hotel_id":131,"srch_ci":"2020-01-01","srch_ci":"2020-02-01","srch_co":"2020-02-03"}""",
-      "{\"id\":27,\"date_time\":\"a\\tb\\u0001\",\"hotel_id\":270}",
       """{"id":28,"extra":{"a":[1,2,{"b":null}]},"hotel_id":280}""",
       """{"HOTEL_ID":29,"Srch_ci":"2020-01-01"}""",
-      " \n {\"id\":30,\"hotel_id\":300} \r\n")
+      " \n {\"id\":30,\"hotel_id\":300} \r\n",
+      """{"id":50,"orig_destination_distance":-0,"hotel_id":500}""",
+      """{"id":51,"orig_destination_distance":-0.0,"hotel_id":510}""",
+      s"""{"id":52,"hotel_id":${Long.MaxValue - 1}}""",
+      s"""{"id":53,"hotel_id":${Long.MaxValue}}""",
+      s"""{"id":56,"hotel_id":${Long.MinValue}}""",
+      s"""{"id":57,"hotel_id":${Long.MinValue + 1}}""")
     val text = wirePayloads.flatten.map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
     assert(text.count(_.startsWith("{\"id\":1,\"date_time\"")) == 1)
-    val taken = wirePayloads.flatten.zip(text).map { case (p, s) =>
-      s -> (whole.decodeFlat(UTF8String.fromBytes(p)) != null)
+    def taken(d: DecodeJsonPayload) = wirePayloads.flatten.zip(text).map { case (p, s) =>
+      s -> (d.decodeFlat(UTF8String.fromBytes(p)) != null)
     }
-    val expected = text.map(s => s -> (flat(s) || s.startsWith("{\"id\":1,\"date_time\"") ||
-      s.contains("Zürich") || s.contains("\"id\":40,") || s.contains("\"id\":41,")))
-    assert(taken == expected)
+    val expected = text.map(s => s -> (flat(s) || s.startsWith("{\"id\":1,\"date_time\"")))
+    assert(taken(whole) == expected)
     assert(flat.forall(text.contains))
+    // with the 3 read fields, a value the fast path cannot read is
+    // validated and skipped when it sits in an unread field: escapes and a
+    // control escape (27), invalid UTF-8 (41), a string for a LONG (3, 11)
+    // and an overflowing LONG and INT (17)
+    val skipped = Seq("{\"id\":27,", "{\"id\":41,", "{\"id\":\"three\",", "{\"id\":11,",
+      "{\"id\":99999999999999999999,")
+    val expectedPruned = expected.map { case (s, fast) =>
+      s -> (fast || skipped.exists(s.startsWith))
+    }
+    assert(taken(pruned) == expectedPruned)
+    assert(expectedPruned.count(_._2) == expected.count(_._2) + skipped.size)
+    // lines shaped like PayloadGen's, in every variety it writes, never
+    // fall back, so a measured gain cannot come from a silent fallback
+    val lines = generatedLines(1000, seed = 7L)
+    for (d <- Seq(whole, pruned))
+      assert(lines.count(l => d.decodeFlat(UTF8String.fromString(l)) == null) == 0)
+  }
+
+  /** Lines shaped like perfbench's PayloadGen output: all 20 fields in
+    * schema order after `", "`, a third of the distances null, 9% of the
+    * dates with slashes and 1% of the check-ins unparseable. */
+  private def generatedLines(n: Int, seed: Long): Seq[String] = {
+    val r = new scala.util.Random(seed)
+    val base = java.time.LocalDate.of(2015, 1, 1)
+    (1 to n).map { id =>
+      val ci = base.plusDays(r.nextInt(1500).toLong)
+      val slash = r.nextInt(100) < 9
+      def date(d: java.time.LocalDate) = if (slash) d.toString.replace('-', '/') else d.toString
+      val ciStr =
+        if (r.nextInt(100) == 0) Seq("", "unknown", "2017-13-01", "31.12.2017")(r.nextInt(4))
+        else date(ci)
+      val dist = if (r.nextInt(3) == 0) "null" else (r.nextInt(1000000) / 100.0).toString
+      val values = Seq(id.toString,
+        s"\"${ci.minusDays(1L + r.nextInt(90))} ${10 + r.nextInt(14)}:${10 + r.nextInt(50)}:" +
+          s"${10 + r.nextInt(50)}\"",
+        r.nextInt(50), r.nextInt(50), r.nextInt(240), r.nextInt(1000), r.nextInt(56000), dist,
+        r.nextInt(1200000), r.nextInt(2), r.nextInt(2), r.nextInt(11), s"\"$ciStr\"",
+        s"\"${date(ci.plusDays(r.nextInt(21) - 3L))}\"", 1 + r.nextInt(4), r.nextInt(3),
+        1 + r.nextInt(2), r.nextInt(65000), 1 + r.nextInt(9), 100000L + r.nextInt(900000000))
+      StreamingPipeline.expediaSchema.fieldNames.zip(values)
+        .map { case (k, v) => s"\"$k\": $v" }.mkString("{", ", ", "}")
+    }
+  }
+
+  /** Byte mutations of PayloadGen-shaped lines around what the fast path
+    * accepts: escapes inserted into names and string values, duplicate
+    * keys, nested values, numbers at and past the grammar's edges, then
+    * truncation and byte flips. One line in five stays as generated. */
+  private def mutatedPayloads(n: Int, seed: Long): Seq[Option[Array[Byte]]] = {
+    val r = new scala.util.Random(seed)
+    def pick[T](xs: Seq[T]): T = xs(r.nextInt(xs.length))
+    val escapes = Seq("\\\"", "\\\\", "\\/", "\\b", "\\n", "\\t", "\\u0041", "\\u00e9",
+      "\\ud83d", "\\u0000", "\\q", "\\u12", "\\x41", "\t", "\u0001", "\u007f", "é", "'")
+    val nested = Seq("{}", "[]", "{\"a\": [1, {\"b\": null}], \"c\": \"x\"}", "[[[[1]]], {}]",
+      "{\"x\": {\"y\": {\"z\": []}}}", "[\"s\\\"\", true, false, null, -1.5e3]", "[1,]",
+      "{\"a\" 1}", "[1 2]", "{\"a\": 1,}", "{1: 2}", "[" * 998 + "]" * 998,
+      "[" * 999 + "]" * 999, "[tru]", "{\"a\": nul}")
+    val numbers = Seq("-0", "-0.0", "0", "0.0", "-0e0", "007", "-01", "+1", ".5", "1.", "1.e3",
+      "1e", "1e+", "1E+2", "2.5e-3", "1e400", "-1e400", "4.9e-325", "NaN", "Infinity",
+      "-Infinity", "0x10", "1" * 25, "9" * 999, "9" * 1001, "1." + "0" * 998,
+      Long.MaxValue.toString, (BigInt(Long.MaxValue) + 1).toString, Long.MinValue.toString,
+      (BigInt(Long.MinValue) - 1).toString, Int.MaxValue.toString, (Int.MaxValue + 1L).toString,
+      "\"12\"", "true", "nulll", "tru")
+    def insert(s: String, what: String): String = {
+      val at = 1 + r.nextInt(math.max(1, s.length - 1))
+      s.take(at) + what + s.drop(at)
+    }
+    val fields = StreamingPipeline.expediaSchema.fieldNames.toIndexedSeq
+    generatedLines(n, seed).map { line =>
+      val members = scala.collection.mutable.ArrayBuffer(
+        line.drop(1).dropRight(1).split(", \"").toSeq.map { m =>
+          val Array(k, v) = m.stripPrefix("\"").split("\": ", 2)
+          (k, v)
+        }: _*)
+      if (r.nextInt(5) != 0) for (_ <- 0 to r.nextInt(2)) {
+        val i = r.nextInt(members.length)
+        val (k, v) = members(i)
+        r.nextInt(6) match {
+          case 0 => members(i) = (insert(k, pick(escapes)), v)
+          case 1 => members(i) = (k, if (v.startsWith("\"")) insert(v, pick(escapes)) else v)
+          case 2 => members += ((k, pick(Seq("null", "1", "\"x\"", v, pick(numbers)))))
+          case 3 => members(i) = (k, pick(nested))
+          case 4 => members(i) = (k, pick(numbers))
+          case _ => members.remove(i); members.insert(r.nextInt(members.length + 1),
+            (pick(fields), pick(Seq("null", "1", "\"2020-01-01\"", pick(numbers)))))
+        }
+      }
+      val bytes = members.map { case (k, v) => s"\"$k\": $v" }.mkString("{", ", ", "}")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val mutated = r.nextInt(8) match {
+        case 0 => bytes.take(r.nextInt(bytes.length))
+        case 1 =>
+          val b = bytes.clone()
+          b(r.nextInt(b.length)) = pick(Seq[Int]('"', '\\', ',', '}', '{', '[', ':', ' ', '\t',
+            '0', '-', '.', 'e', '+', '\'', 0x00, 0x01, 0x1f, 0x7f, 0x80, 0xc3, 0xff,
+            r.nextInt(256))).toByte
+          b
+        case 2 => bytes ++ pick(Seq(" ", "\n", " x", "}", ",", "{}", "\u0000")).getBytes("UTF-8")
+        case _ => bytes
+      }
+      Some(mutated)
+    }
+  }
+
+  test("fromJsonPayload: byte-mutated payloads decode as from_json does, pruned and whole") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.DecodeJsonPayload
+    import org.apache.spark.unsafe.types.UTF8String
+    val payloads = mutatedPayloads(3000, seed = 20261020L)
+    val read = Seq("srch_ci", "srch_co", "hotel_id")
+    val decoders = Seq(StreamingPipeline.expediaSchema,
+      org.apache.spark.sql.types.StructType(read.map(StreamingPipeline.expediaSchema(_))))
+      .map(DecodeJsonPayload(Literal(""), _, Some("UTC")))
+    // both paths are exercised on both schemas
+    for (d <- decoders) {
+      val fast = payloads.flatten.count(p => d.decodeFlat(UTF8String.fromBytes(p)) != null)
+      assert(fast > payloads.size / 5 && fast < payloads.size * 4 / 5, fast)
+    }
+    val raw = stagedPayloads(payloads)
+    val whole = StreamingPipeline.fromJsonPayload(raw)
+    assert(decodedFields(whole).map(_.size) == Seq(20))
+    assert(sortedRows(whole) == sortedRows(fromJsonReference(raw)))
+    // against from_json of the 3 fields, not the 20 projected: from_json
+    // recovers from a syntax error inside a field it converts (a partial
+    // record) but not inside one it skips, so `"date_time": [1 2]` keeps
+    // the 3 read fields in the one and nulls them in the other
+    val pruned = StreamingPipeline.fromJsonPayload(raw).select(read.map(col): _*)
+    assert(decodedFields(pruned) == Seq(read))
+    assert(sortedRows(pruned) == sortedRows(fromJsonReference(raw, decoders(1).schema)))
   }
 
   test("batch ivfTopK per micro-batch in foreachBatch equals ivfTopK over all queries") {

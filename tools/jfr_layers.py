@@ -2,9 +2,9 @@
 """Share of executor CPU samples per layer of the wire path, from a JFR file.
 
 Usage:
-    tools/jfr_layers.py <recording.jfr> [--top N]
+    tools/jfr_layers.py <recording.jfr> [--top N] [--match REGEX ...]
     jfr print --events jdk.ExecutionSample --stack-depth 256 <recording.jfr> \\
-        | tools/jfr_layers.py - [--top N]
+        | tools/jfr_layers.py - [--top N] [--match REGEX ...]
 
 Reads the `jdk.ExecutionSample` events of `Executor task launch worker`
 threads (Spark's task threads) and attributes each sample to one layer:
@@ -14,6 +14,16 @@ innermost stack frame that matches one of the patterns below, so a
 Jackson frame under `DecodeJsonPayload` as decode. It prints the share of
 samples per layer and the top self frames (the innermost frame of each
 sample), each with its layer.
+
+`--match REGEX` (repeatable) prints the inclusive share of the samples
+whose stack matches REGEX, split by layer. The regex is searched in the
+stack's frames joined innermost first by " < ", so a pattern for one frame
+counts the samples that have such a frame, and `A.* < .*B` the samples in
+which a frame matching A runs under one matching B. For example,
+`--match 'com\.fasterxml\.jackson.* < .*decodeFlat'` counts the Jackson
+frames on the decode's fast path, and
+`--match 'com\.fasterxml\.jackson.* < .*FailureSafeParser'` those on its
+fallback.
 
 To record a perfbench run without touching perfbench (its runner passes
 the environment to the JVM it starts):
@@ -86,6 +96,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("input", help="a .jfr file, or - for `jfr print` text on stdin")
     ap.add_argument("--top", type=int, default=15, help="self frames to list")
+    ap.add_argument("--match", action="append", default=[], metavar="REGEX",
+                    help="print the share of samples whose stack matches REGEX")
     args = ap.parse_args()
     if args.input == "-":
         lines = sys.stdin
@@ -94,17 +106,28 @@ def main():
                               "--stack-depth", "256", args.input],
                              check=True, capture_output=True, text=True).stdout
         lines = out.splitlines()
+    matches = [(m, re.compile(m)) for m in args.match]
+    matched = {m: collections.Counter() for m in args.match}
     per_layer, self_frames = collections.Counter(), collections.Counter()
     for frames in samples(lines):
         layer = layer_of(frames)
         per_layer[layer] += 1
         self_frames[(frames[0], layer)] += 1
+        stack = " < ".join(frames) if matches else ""
+        for m, pattern in matches:
+            if pattern.search(stack):
+                matched[m][layer] += 1
     total = sum(per_layer.values())
     if total == 0:
         sys.exit(f"no {EXECUTOR} samples in {args.input}")
     print(f"{total} executor samples")
     for layer in ORDER:
         print(f"  {layer:<10} {100.0 * per_layer[layer] / total:5.1f}%")
+    for m in args.match:
+        split = ", ".join(f"{layer} {100.0 * matched[m][layer] / total:.1f}%"
+                          for layer in ORDER if matched[m][layer])
+        print(f"match {m}: {100.0 * sum(matched[m].values()) / total:.1f}%"
+              + (f" ({split})" if split else ""))
     print(f"top {args.top} self frames:")
     for (frame, layer), n in self_frames.most_common(args.top):
         print(f"  {100.0 * n / total:5.1f}%  {layer:<10} {frame}")
