@@ -479,12 +479,7 @@ private[graft] object EntryAgg {
       val li = t(s, dir, "lineitem")
       val m = 4096L
       val rho = li.select(col("l_returnflag").as("flag"), col("l_partkey"))
-        .withColumn("z1", expr(s"l_partkey + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("l_partkey")))
         .withColumn("bucket", expr("shiftrightunsigned(h, 52)"))
         .withColumn("rest", expr(s"h & ${(1L << 52) - 1}L"))
         .withColumn("rho", expr(
@@ -527,16 +522,11 @@ private[graft] object EntryAgg {
       // 8 bytes·4096 per shard, never a re-scan. Emits both estimates
       // (bit-identical) plus the exact global count and the equality
       // flag the property rests on.
-      // tF (r16 opt): the splitmix64 register build is 5 chained hash
-      // expressions per row over the scan — interleaved A/B 1.97 → 1.49 s
+      // tF (r16 opt): the register build is per-row hash work over the
+      // scan — interleaved A/B 1.97 → 1.49 s
       val li = tF(s, dir, "lineitem")
       val rho = li.select(col("l_returnflag").as("flag"), col("l_partkey"))
-        .withColumn("z1", expr(s"l_partkey + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("l_partkey")))
         .withColumn("bucket", expr("shiftrightunsigned(h, 52)"))
         .withColumn("rest", expr(s"h & ${(1L << 52) - 1}L"))
         .withColumn("rho", expr(
@@ -626,7 +616,7 @@ private[graft] object EntryAgg {
       // how overlap between two 10⁹-key populations is sized from two
       // 4096-row sketches that never co-shuffle; the subtraction
       // inflates relative error (the known cost, reported beside the
-      // exact intersection at fixture SF). Same splitmix chain,
+      // exact intersection at fixture SF). Same mix64 hash,
       // canonical harmonic fold, and small-range branch as
       // agg_hll_estimate.
       val m = 4096L
@@ -635,12 +625,7 @@ private[graft] object EntryAgg {
       val rho = li.select(
           when(col("l_returnflag") === "R", "a").otherwise("b").as("st"),
           col("l_partkey"))
-        .withColumn("z1", expr(s"l_partkey + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("l_partkey")))
         .withColumn("bucket", expr("shiftrightunsigned(h, 52)"))
         .withColumn("rest", expr(s"h & ${(1L << 52) - 1}L"))
         .withColumn("rho", expr(
@@ -706,12 +691,7 @@ private[graft] object EntryAgg {
       val m = 65536L
       val li = t(s, dir, "lineitem")
       val bits = li.select(col("l_partkey").as("k"))
-        .withColumn("z1", expr(s"k + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("k")))
         .select(explode(array((0 to 3).map(r =>
           expr(s"shiftrightunsigned(h, ${16 * r}) & ${m - 1}L")): _*))
           .as("bit"))
@@ -747,12 +727,7 @@ private[graft] object EntryAgg {
       // sketch pass runs.
       val li = t(s, dir, "lineitem")
       val hashed = li.select(col("l_partkey").as("k"))
-        .withColumn("z1", expr(s"k + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("k")))
       val aggCols = count(lit(1)).as("n_rows") +: (0 to 7).map(j =>
         sum(expr(s"CASE WHEN (shiftrightunsigned(h, $j) & 1L) = 1L" +
           " THEN 1L ELSE -1L END")).as(s"z$j"))
@@ -790,12 +765,7 @@ private[graft] object EntryAgg {
           "datediff(CAST(ts AS DATE), d0) * 2 < datediff(d1, d0)"), "a")
           .otherwise("b"))
         .select(col("epoch"), col("user_id").as("k"))
-        .withColumn("z1", expr(s"k + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("k")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val grid = tagged.select(col("epoch"), explode(array(
           (0 to 3).map(d => struct(lit(d.toLong).as("d"),
@@ -813,12 +783,7 @@ private[graft] object EntryAgg {
         .orderBy(abs(col("exact_delta")).desc, col("k")).limit(10)
       val probe = wide.select(col("k"), col("exact_a"), col("exact_b"),
           col("exact_delta"))
-        .withColumn("z1", expr(s"k + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("k")))
         .select(col("k"), col("exact_a"), col("exact_b"), col("exact_delta"),
           explode(array((0 to 3).map(d => struct(lit(d.toLong).as("d"),
             expr(s"shiftrightunsigned(h, ${8 * d}) & 255L").as("cell")))
@@ -856,12 +821,7 @@ private[graft] object EntryAgg {
       val li = tF(s, dir, "lineitem")
       val hashed = li.select(col("l_returnflag").as("flag"),
           col("l_partkey").as("k"))
-        .withColumn("z1", expr(s"k + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("k")))
       val cells = hashed.select(col("flag"), col("k"), explode(array(
           (0 to 3).map(d => struct(lit(d.toLong).as("d"),
             expr(s"shiftrightunsigned(h, ${8 * d}) & 255L").as("cell")))
@@ -886,12 +846,7 @@ private[graft] object EntryAgg {
       // probe cells recomputed from the 5 keys alone (KB-sized), never
       // from the data-sized cell frame — the serving-side point lookup
       val probe = top5
-        .withColumn("z1", expr(s"k + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("k")))
         .select(col("k"), col("exact"), explode(array(
           (0 to 3).map(d => struct(lit(d.toLong).as("d"),
             expr(s"shiftrightunsigned(h, ${8 * d}) & 255L").as("cell")))

@@ -930,13 +930,7 @@ private[graft] object EntryGraph {
           (col("l_suppkey") * 2L).as("src"),
           (col("l_partkey") * 2L + 1L).as("dst"))
         .distinct()
-        .withColumn("z1",
-          expr(s"src * 31L + dst + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("keep", (pmod(expr("z3 ^ shiftrightunsigned(z3, 31)"),
+        .withColumn("keep", (pmod(HashFunctions.mix64(expr("src * 31L + dst")),
           lit(4L)) === 0L).cast("int"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       def hist(edges: DataFrame) = edges

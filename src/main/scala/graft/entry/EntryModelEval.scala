@@ -910,12 +910,7 @@ private[graft] object EntryModelEval {
       // arithmetic over two exact counts.
       val c = t(s, dir, "customer")
       c.select(col("c_custkey"))
-        .withColumn("z1", expr(s"c_custkey + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("c_custkey")))
         .withColumn("arm_a", expr("(h & 1) = 0"))
         .agg(sum(when(col("arm_a"), 1L).otherwise(0L)).as("n_a"),
           sum(when(!col("arm_a"), 1L).otherwise(0L)).as("n_b"))

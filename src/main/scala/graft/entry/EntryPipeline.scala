@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Bloom, HashFunctions, KmvFunctions, StayCategory, TextFunctions, VectorFunctions}
+import graft.functions.{Bloom, HashFunctions, HashOps, KmvFunctions, StayCategory, TextFunctions, VectorFunctions}
 import graft.operators.{AsOf, Dedup, Enrich, Layout, Multimodal, Rank, Similarity, Skew}
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
@@ -1173,12 +1173,7 @@ private[graft] object EntryPipeline {
       val keyed = d.select(col("doc_id"),
           pmod(col("doc_id"), lit(64L)).as("file_id"),
           HashFunctions.fnv64(col("text")).as("kh"))
-        .withColumn("z1", expr(s"kh + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("kh")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       def fieldBits(src: DataFrame, idCol: String) =
         src.select(col(idCol), explode(array((0 to 3).map(r =>
@@ -1304,12 +1299,7 @@ private[graft] object EntryPipeline {
       val c = t(s, dir, "customer")
       c.groupBy(col("c_nationkey").cast("bigint").as("nation"))
         .agg(count(lit(1)).as("n_exact"))
-        .withColumn("z1", expr(s"nation + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("nation")))
         // u ∈ (0,1): top 52 bits of h over 2^52, offset by 2^-53
         .withColumn("u", expr(
           s"""(CAST(shiftrightunsigned(h, 12) AS DOUBLE)
@@ -1342,12 +1332,7 @@ private[graft] object EntryPipeline {
       o.groupBy(col("o_orderpriority").as("priority"))
         .agg(count(lit(1)).as("n_exact"))
         .withColumn("k", HashFunctions.fnv64(col("priority")))
-        .withColumn("z1", expr(s"k + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("k")))
         .withColumn("u", expr(
           s"""(CAST(shiftrightunsigned(h, 12) AS DOUBLE)
                + 0.5) / ${(1L << 52).toDouble}"""))
@@ -1478,10 +1463,7 @@ private[graft] object EntryPipeline {
       val wcum = Window.orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val seed = 42L
-      val z1 = seed + 0x9e3779b97f4a7c15L
-      val z2 = (z1 ^ (z1 >>> 30)) * 0xbf58476d1ce4e5b9L
-      val z3 = (z2 ^ (z2 >>> 27)) * 0x94d049bb133111ebL
-      val h = z3 ^ (z3 >>> 31)
+      val h = HashOps.mix64(seed)
       val u = ((h >>> 12).toDouble + 0.5) / (1L << 52).toDouble
       val scored = bins.crossJoin(broadcast(n))
         .withColumn("cum_before",
@@ -1611,12 +1593,7 @@ private[graft] object EntryPipeline {
              30000000L)""").as("v_c"))
         .agg(count(lit(1)).as("n"), sum("v_c").as("s_c"))
       agg0
-        .withColumn("z1", expr(s"42L + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(lit(42L)))
         .withColumn("u", expr(
           s"""(CAST(shiftrightunsigned(h, 12) AS DOUBLE)
                + 0.5) / ${(1L << 52).toDouble}"""))
@@ -2905,10 +2882,7 @@ private[graft] object EntryPipeline {
 
     "privacy_dp_quantile" -> {
       val seed = 42L
-      val z1 = seed + 0x9e3779b97f4a7c15L
-      val z2 = (z1 ^ (z1 >>> 30)) * 0xbf58476d1ce4e5b9L
-      val z3 = (z2 ^ (z2 >>> 27)) * 0x94d049bb133111ebL
-      val h = z3 ^ (z3 >>> 31)
+      val h = HashOps.mix64(seed)
       val u = ((h >>> 12).toDouble + 0.5) / (1L << 52).toDouble
       s"""WITH bins AS (
            SELECT CAST(floor(o_totalprice / 25000.0) AS BIGINT) AS bin,

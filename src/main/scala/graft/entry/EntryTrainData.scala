@@ -1066,12 +1066,7 @@ private[graft] object EntryTrainData {
             .as("rid"))
         .distinct()
         .withColumn("shard", pmod(col("rid"), lit(4L)))
-        .withColumn("z1", expr(s"rid + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(col("rid")))
         .select("shard", "rid", "h")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val ws = Window.partitionBy("shard").orderBy(col("h"), col("rid"))
@@ -1111,13 +1106,7 @@ private[graft] object EntryTrainData {
       val keyed = d.select(col("doc_id"),
           coalesce(size(TextFunctions.tokens(lower(col("text")))), lit(0))
             .cast("long").as("n_tokens"))
-        .withColumn("z1",
-          expr(s"doc_id * 31L + 3L + ${0x9e3779b97f4a7c15L}L"))
-        .withColumn("z2",
-          expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-        .withColumn("z3",
-          expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-        .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
+        .withColumn("h", HashFunctions.mix64(expr("doc_id * 31L + 3L")))
         .withColumn("shard", pmod(col("h"), lit(8L)))
       val ws = Window.partitionBy("shard").orderBy(col("h"), col("doc_id"))
       val per = keyed.withColumn("rn", row_number().over(ws).cast("long"))

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{
+  BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -286,6 +287,21 @@ case class Fnv64(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** `mix64(long) -> long` — the splitmix64 finalizer ([[HashOps.mix64]])
+  * as a native codegen'd expression: the one spelling of the hash that
+  * the sketch, sampling and privacy queries derive buckets, registers and
+  * noise draws from. An INT key is cast to BIGINT first. */
+case class Mix64(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
+  override def dataType: DataType = LongType
+  override def inputTypes = Seq(LongType)
+  override def prettyName: String = "mix64"
+  override protected def nullSafeEval(in: Any): Any =
+    HashOps.mix64(in.asInstanceOf[Long])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashOps.mix64($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** `es_max_draw(base: long, w: int) -> long` — Efraimidis–Spirakis
   * integer sampling priority (max of w seeded splitmix64 draws); one
   * fused loop per row, no per-draw string hashing or explode. */
@@ -431,6 +447,8 @@ object HashFunctions {
   import org.apache.spark.sql.graft.Bridge
   def fnv64(s: Column): Column =
     Bridge.column(Fnv64(Bridge.expression(s)))
+  def mix64(c: Column): Column =
+    Bridge.column(Mix64(Bridge.expression(c)))
   def simhash64(tokens: Column): Column =
     Bridge.column(SimHash64(Bridge.expression(tokens)))
   def minhashSignature(shingles: Column, k: Int): Column =

@@ -117,17 +117,6 @@ object TextFunctions {
     }.otherwise("und")
   }
 
-  /** Word n-gram shingles: array of space-joined n-token windows.
-    * Documents shorter than n tokens get a single shingle of all tokens. */
-  def wordShingles(text: Column, n: Int): Column = {
-    val ts = tokens(lower(text))
-    val cnt = size(ts)
-    when(cnt <= n, array(array_join(ts, " ")))
-      .otherwise(transform(
-        sequence(lit(0), cnt - n),
-        i => array_join(slice(ts, i + 1, lit(n)), " ")))
-  }
-
   /** PII redaction for training corpora: emails → [EMAIL], IPv4 → [IP],
     * phone-shaped numbers → [PHONE]. Patterns are RE2-compatible (no
     * lookaround, no backrefs) so the DuckDB oracle applies the IDENTICAL

@@ -42,11 +42,6 @@ object Dedup {
 
   // -------------------------------------------------------------- MinHash
 
-  /** k-MinHash signature over a shingle array — native one-pass
-    * expression (graft.functions.MinHashSignature). */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    graft.functions.HashFunctions.minhashSignature(shingles, numHashes)
-
   /** Token n-gram shingle hashes (native one-pass; shingle strings never
     * materialize — see HashOps.shingleHashes). */
   def hashedShingles(text: Column, shingleSize: Int): Column =
@@ -60,14 +55,8 @@ object Dedup {
                          shingleSize: Int): DataFrame =
     docs.select(col(idCol), hashedShingles(col(textCol), shingleSize).as("hs"))
 
-  /** Docs → (id, band, bandKey) exploded LSH bucket table.
+  /** (id, hs) → (id, band, bandKey) exploded LSH bucket table.
     * numHashes = bands * rowsPerBand; bandKey hashes the signature slice. */
-  def minhashBuckets(docs: DataFrame, idCol: String, textCol: String,
-                     shingleSize: Int, bands: Int, rowsPerBand: Int): DataFrame =
-    bucketsFromShingles(hashedShingleTable(docs, idCol, textCol, shingleSize),
-      idCol, bands, rowsPerBand)
-
-  /** (id, hs) → (id, band, bandKey) bucket table (see minhashBuckets). */
   def bucketsFromShingles(sh: DataFrame, idCol: String,
                           bands: Int, rowsPerBand: Int): DataFrame = {
     val sig = HashFunctions.minhashFromHashes(col("hs"), bands * rowsPerBand)
@@ -183,18 +172,10 @@ object Dedup {
 
   /** Contiguous-overlap pairs via winnowing: docs sharing ≥ `minShared`
     * winnowed fingerprints. Same df-capped inverted-index shuffle shape
-    * as the shingle variants, over an index `window`× smaller. */
-  def winnowingPairs(docs: DataFrame, idCol: String, textCol: String,
-                     shingleSize: Int = 3, window: Int = 4,
-                     minShared: Int = 2,
-                     maxPrintDf: Int = 100000): DataFrame =
-    winnowingPairsFromShingles(
-      hashedShingleTable(docs, idCol, textCol, shingleSize), idCol,
-      window, minShared, maxPrintDf)
-
-  /** `winnowingPairs` over a precomputed (id, hs) shingle table. `hs`
-    * must be the RAW (ordered, undeduplicated) shingle sequence —
-    * winnowing slides over consecutive shingles. */
+    * as the shingle variants, over an index `window`× smaller. Takes an
+    * (id, hs) shingle table ([[hashedShingleTable]]); `hs` must be the
+    * RAW (ordered, undeduplicated) shingle sequence — winnowing slides
+    * over consecutive shingles. */
   def winnowingPairsFromShingles(sh0: DataFrame, idCol: String,
                                  window: Int = 4, minShared: Int = 2,
                                  maxPrintDf: Int = 100000): DataFrame = {
@@ -215,16 +196,8 @@ object Dedup {
     * Candidates come from the shared-shingle inverted index (df ≥ 2,
     * df ≤ maxShingleDf — Σdf², never n²); the threshold is applied to
     * the integer match count (≥ ⌈minEstimate·k⌉), so no float boundary
-    * can disagree across engines. */
-  def minhashEstimatePairs(docs: DataFrame, idCol: String, textCol: String,
-                           shingleSize: Int = 3, k: Int = 16,
-                           minEstimate: Double = 0.5,
-                           maxComponentDf: Int = 100000): DataFrame =
-    minhashEstimatePairsFromShingles(
-      hashedShingleTable(docs, idCol, textCol, shingleSize), idCol,
-      k, minEstimate, maxComponentDf)
-
-  /** `minhashEstimatePairs` over a precomputed (id, hs) shingle table. */
+    * can disagree across engines. Takes an (id, hs) shingle table
+    * ([[hashedShingleTable]]). */
   def minhashEstimatePairsFromShingles(sh0: DataFrame, idCol: String,
                                        k: Int = 16,
                                        minEstimate: Double = 0.5,
@@ -260,17 +233,6 @@ object Dedup {
       rowsPerBand, threshold)
       .select(col("id_b").as(idCol))
     docs.join(doomed, Seq(idCol), "left_anti")
-  }
-
-  /** Exact n-gram Jaccard for given (id_a, id_b) pairs: joins each side to
-    * its distinct shingle set, then |∩| / |∪|. */
-  def withJaccard(pairs: DataFrame, docs: DataFrame, idCol: String,
-                  textCol: String, shingleSize: Int): DataFrame = {
-    val sh = docs.select(
-      col(idCol),
-      array_distinct(hashedShingles(col(textCol), shingleSize)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    jaccardOverShingleSets(pairs, sh, idCol)
   }
 
   /** Exact Jaccard over precomputed distinct shingle sets `shd(id, sh)`. */
@@ -346,15 +308,8 @@ object Dedup {
     * one) that symmetric Jaccard misses when lengths differ: a 100-shingle
     * doc fully inside a 1000-shingle doc has Jaccard 0.1 but containment
     * 1.0. Same inverted-index shuffle shape as `ngramJaccardPairs`
-    * (Σ df² with df∈[2, maxShingleDf], never n²). */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       shingleSize: Int = 3, threshold: Double = 0.8,
-                       maxShingleDf: Int = 100000): DataFrame =
-    containmentPairsFromShingles(
-      hashedShingleTable(docs, idCol, textCol, shingleSize), idCol,
-      threshold, maxShingleDf)
-
-  /** `containmentPairs` over a precomputed (id, hs) shingle table. */
+    * (Σ df² with df∈[2, maxShingleDf], never n²). Takes an (id, hs)
+    * shingle table ([[hashedShingleTable]]). */
   def containmentPairsFromShingles(sh0: DataFrame, idCol: String,
                                    threshold: Double = 0.8,
                                    maxShingleDf: Int = 100000): DataFrame =

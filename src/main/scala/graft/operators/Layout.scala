@@ -74,81 +74,6 @@ object Layout {
     n
   }
 
-  /** Interleave the low 16 bits of two longs (Morton/Z-value): bit i of
-    * `a` lands at position 2i, bit i of `b` at 2i+1. Standard
-    * bit-spreading with shift/mask chains — pure codegen'd column ops. */
-  def zValue(a: Column, b: Column): Column = {
-    def spread(x0: Column): Column = {
-      val x1 = x0.bitwiseAND(lit(0xFFFFL))
-      val x2 = x1.bitwiseOR(shiftleft(x1, 8)).bitwiseAND(lit(0x00FF00FFL))
-      val x3 = x2.bitwiseOR(shiftleft(x2, 4)).bitwiseAND(lit(0x0F0F0F0FL))
-      val x4 = x3.bitwiseOR(shiftleft(x3, 2)).bitwiseAND(lit(0x33333333L))
-      x4.bitwiseOR(shiftleft(x4, 1)).bitwiseAND(lit(0x55555555L))
-    }
-    spread(a).bitwiseOR(shiftleft(spread(b), 1))
-  }
-
-  /** Z-ordered write: quantize two numeric columns to 16-bit buckets over
-    * their observed ranges, interleave into a Z-value, range-partition and
-    * sort the data by it. Each output file then covers a small RECTANGLE
-    * in (colA, colB) space instead of a full-width stripe, so parquet
-    * min/max skipping prunes files for predicates on EITHER column — the
-    * multi-dimensional clustering a single-column sort can't give. This is
-    * what makes "WHERE a = x AND b BETWEEN .." scans cheap at 100 TB when
-    * the table can only be written once.
-    *
-    * Columns are clustered on their integer part (cast to BIGINT before
-    * quantization) — exact for integral columns; fractional columns
-    * cluster at whole-number resolution, which parquet min/max pruning
-    * still benefits from.
-    *
-    * Reference point: the same layout trick Delta/Iceberg OPTIMIZE ZORDER
-    * applies; here it is a plain parquet write with deterministic
-    * fixed-range quantization (one stats pass + one ordered write). */
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-                    numFiles: Int): Unit = {
-    val stats = df.agg(
-      min(col(colA)).cast("long").as("za_min"), max(col(colA)).cast("long").as("za_max"),
-      min(col(colB)).cast("long").as("zb_min"), max(col(colB)).cast("long").as("zb_max"))
-    // Quantize to a FULL 16-bit bucket space in both regimes:
-    //  - small range (< 2^46): multiply-first (offset*65535 div range+1)
-    //    scales narrow domains UP so both dimensions contribute 16
-    //    balanced bits to the interleave (identity/divide-first would
-    //    leave a narrow column only a few significant bits and the
-    //    z-curve would degenerate to a single-column sort);
-    //  - huge range (≥ 2^46, e.g. epoch-micros/nanos or hash-derived
-    //    keys): multiply-first overflows Long past ~2^47 and wraps
-    //    buckets negative, so divide-first (offset div (range div 65536
-    //    + 1)) — which loses only sub-bucket resolution the 16-bit
-    //    quantizer discards anyway.
-    // Overflow discipline: `max - min` itself wraps negative when the
-    // keys span more than the signed-Long range (full-range fnv64 keys),
-    // which would silently take the multiply-first branch and produce
-    // garbage z-values. So the regime test halves BEFORE subtracting
-    // (max/2 - min/2 ≈ range/2, never overflows), and the huge-range
-    // branch divides each operand by the step BEFORE differencing
-    // (c div step - min div step ∈ [0, ~65537]) — no subexpression can
-    // exceed Long anywhere. div truncates toward zero, which is still
-    // monotone in c, so bucket ordering (all z-order needs) is preserved.
-    def bucket16(c: String, minC: String, maxC: String): Column = expr(
-      s"""CASE WHEN ($maxC div 2) - ($minC div 2) < ${1L << 45}
-         |  THEN ((CAST($c AS BIGINT) - $minC) * 65535)
-         |       div ($maxC - $minC + 1)
-         |  ELSE least(greatest(
-         |         (CAST($c AS BIGINT) div (((($maxC div 2) - ($minC div 2)) div 32768) + 1))
-         |       - ($minC div (((($maxC div 2) - ($minC div 2)) div 32768) + 1)), 0L), 65535L)
-         |END""".stripMargin)
-    val q = df.crossJoin(broadcast(stats))
-      .withColumn("z", zValue(
-        bucket16(colA, "za_min", "za_max"),
-        bucket16(colB, "zb_min", "zb_max")))
-      .drop("za_min", "za_max", "zb_min", "zb_max")
-    q.repartitionByRange(numFiles, col("z"))
-      .sortWithinPartitions("z")
-      .drop("z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
   /** Hilbert-curve index of two `bits`-bit coordinates — Z-order's
     * stronger sibling: the Hilbert curve has NO long diagonal jumps, so
     * consecutive index ranges cover tighter (a, b) rectangles than the
@@ -235,22 +160,6 @@ object Layout {
           s"shiftright(${hilbertStatePacked}L, CAST(_hidx * 2 AS INT)) & 3"))
     }
     walked.drop("_hst", "_hidx")
-  }
-
-  /** Idempotent partition replacement: with dynamic partition overwrite,
-    * rewriting one partition's data leaves every other partition intact —
-    * the retry-safe incremental-batch pattern (no Delta/iceberg needed). */
-  def overwritePartitions(df: DataFrame, path: String,
-                          partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
   }
 
   /** Order- and layout-independent dataset content fingerprint:

@@ -329,10 +329,15 @@ class CusumProcessor(levelCents: Long, thresholdCents: Long)
 }
 
 /** Streaming operators beyond the reference topology: arbitrary state,
-  * as-of joins, event-time detectors, mergeable-sketch aggregates, and
-  * ingest-time dedup and quality stages. The reference topology itself
-  * (payload decode → enrich → hotels_count changelog) is
-  * [[StreamingPipeline]]; nothing here feeds it. */
+  * as-of joins, event-time detectors and monitors, and growing-corpus
+  * dedup. The reference topology itself (payload decode → enrich →
+  * hotels_count changelog) is [[StreamingPipeline]]; nothing here feeds
+  * it.
+  *
+  * Nothing here wraps a batch operator: a grouped aggregate (a sketch,
+  * a fingerprint sum, `dropDuplicates`) runs on a streaming frame as it
+  * is, and Structured Streaming keeps its state across micro-batches; a
+  * per-batch operator runs inside the caller's `foreachBatch`. */
 object StreamingExtensions {
 
   /** Arbitrary stateful processing on `transformWithState`: per-user
@@ -525,146 +530,6 @@ object StreamingExtensions {
       .withColumn("drifted", col("tvd_ppm") > thresholdPpm)
   }
 
-  /** Incremental Gram/covariance maintenance over a stream of quantized
-    * embedding rows — the streaming sibling of `embedding_pca_power`'s
-    * batch pass: an update-mode GLOBAL aggregation whose state is the
-    * single d(d+1)/2-long `gram_matrix` buffer (~16 KB at d=64,
-    * independent of stream length), merged across micro-batches by the
-    * aggregate's own exact-integer merge path. Each emitted update is
-    * the full running scatter matrix + row count, so a monitoring job
-    * can re-derive covariance/top-PC drift after every batch without
-    * ever rescanning history. */
-  def gramStream(vecs: DataFrame, d: Int, vecCol: String = "q"): DataFrame =
-    vecs.groupBy().agg(
-      count(lit(1)).as("n_rows"),
-      graft.functions.GramMatrix.gramMatrix(col(vecCol), d).as("gram"))
-
-  /** Streaming HyperLogLog registers (p=12): the distinct-user sketch as
-    * an update-mode streaming aggregation — bucket = top 12 bits of
-    * splitmix64(user_id), register = leading-zero rank of the remaining
-    * 52. State is AT MOST 4096 tiny rows regardless of stream volume; the
-    * update is a grouped max (map-side combinable, and retry-idempotent:
-    * a replayed row can never move a register backwards — the
-    * exactly-once-friendly property); registers from different
-    * shards/streams/days merge by the same max. The closing
-    * harmonic-estimate fold is domain-sized serving-side arithmetic,
-    * identical to batch `agg_hll_estimate`. */
-  def hllStream(events: Dataset[UserEvent]): DataFrame =
-    events.toDF()
-      .withColumn("z1", expr(s"user_id + ${0x9e3779b97f4a7c15L}L"))
-      .withColumn("z2",
-        expr(s"(z1 ^ shiftrightunsigned(z1, 30)) * ${0xbf58476d1ce4e5b9L}L"))
-      .withColumn("z3",
-        expr(s"(z2 ^ shiftrightunsigned(z2, 27)) * ${0x94d049bb133111ebL}L"))
-      .withColumn("h", expr("z3 ^ shiftrightunsigned(z3, 31)"))
-      .withColumn("bucket", expr("shiftrightunsigned(h, 52)"))
-      .withColumn("rest", expr(s"h & ${(1L << 52) - 1}L"))
-      .withColumn("rho", expr(
-        "CASE WHEN rest = 0 THEN 53L ELSE 53L - length(bin(rest)) END"))
-      .groupBy("bucket").agg(max(col("rho")).as("reg"))
-
-  /** Streaming Greenwald–Khanna quantile bounds: the batch `gk_bounds`
-    * TypedImperativeAggregate as an update-mode streaming aggregation —
-    * state is ONE O(1/eps · log(eps·n)) summary per group regardless of
-    * stream volume, merged across micro-batches by the same GK merge the
-    * batch partial-aggregation uses. Each update emits refreshed [lo, hi]
-    * windows per requested quantile; GK's guarantee (the window CONTAINS
-    * the exact interpolation ranks — width may vary with merge order,
-    * containment never does) holds at every emission, so a serving layer
-    * can confirm exact percentiles by sorting only inside the window. */
-  def quantileStream(events: Dataset[UserEvent], eps: Double = 0.01,
-      qs: Seq[Double] = Seq(0.5, 0.95, 0.99)): DataFrame =
-    events.toDF().groupBy()
-      .agg(count(lit(1)).as("n_rows"),
-        graft.functions.GKQuantile.gkBounds(col("value"), eps, qs)
-          .as("gk"))
-
-  /** Streaming Misra–Gries heavy hitters: the capacity-k mergeable
-    * summary (`mg_candidates`) as an update-mode streaming aggregation —
-    * state is ≤ k counters. The MG guarantee holds at every emission
-    * under ANY micro-batch split (Agarwal et al. mergeability): every
-    * key with true frequency > n/(k+1) is present, and each reported
-    * count is a lower bound short by at most n/(k+1). The serving layer
-    * confirms exact counts for just the ≤ k candidates — the
-    * unbounded-key top-k story at 100 TB. */
-  def topkStream(events: Dataset[UserEvent], k: Int = 16): DataFrame =
-    events.toDF().groupBy()
-      .agg(count(lit(1)).as("n_rows"),
-        graft.functions.HeavyHitters.mgCandidates(col("user_id"), k)
-          .as("mg"))
-
-  /** Streaming exact deduplication on key columns — the training-pipeline
-    * dedup operator in its incremental form. Both branches dedup on the
-    * key columns ALONE: with an event-time column + watermark the state is
-    * bounded via `dropDuplicatesWithinWatermark` (a key's state is dropped
-    * once the watermark passes its event time, so a duplicate arriving
-    * within the watermark delay is suppressed while state stays finite);
-    * without one it matches the reference's grow-forever state semantics. */
-  def dedupStream(records: DataFrame, keyCols: Seq[String],
-                  eventTimeCol: Option[String] = None,
-                  watermarkDelay: String = "1 hour"): DataFrame =
-    eventTimeCol match {
-      case Some(ts) =>
-        records.withWatermark(ts, watermarkDelay)
-          .dropDuplicatesWithinWatermark(keyCols)
-      case None => records.dropDuplicates(keyCols)
-    }
-
-  /** Streaming exact-substring SCRUB against a materialized corpus
-    * positional-shingle index (`Dedup.writeSubstrIndex`): each
-    * micro-batch's verbatim token runs of ≥ minRun+shingleSize−1 tokens
-    * that already appear in the corpus are located
-    * (`Dedup.substringSpansFromIndex`) and CUT (`Dedup.applySpans`) —
-    * the sink receives every batch doc with its cleaned canonical token
-    * stream and removal accounting, ready for downstream ingest.
-    *
-    * The streaming face of the Lee et al. 2022 ExactSubstr pipeline:
-    * per batch, text work is O(batch) (the index is probed, corpus text
-    * never re-tokenized), so it sustains rolling ingest at corpus sizes
-    * where re-deduplicating from scratch is impossible. Stateless —
-    * delivery inherits foreachBatch epoch semantics. */
-  def substrScrubStream(docs: DataFrame, indexPath: String,
-                        idCol: String, textCol: String,
-                        sink: (DataFrame, Long) => Unit,
-                        shingleSize: Int = 3, minRun: Int = 6)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val spark = batch.sparkSession
-        val spans = graft.operators.Dedup.substringSpansFromIndex(
-          spark, indexPath, batch, idCol, textCol, shingleSize, minRun)
-        sink(graft.operators.Dedup.applySpans(batch, spans, idCol, textCol),
-          epochId)
-      }
-      .start()
-
-  /** Streaming MinHash near-dup scrub at ingest — the fuzzy sibling of
-    * `substrScrubStream` and the streaming form of
-    * `Dedup.incrementalDedupFromIndex`: each micro-batch probes the
-    * MATERIALIZED corpus dedup index (fingerprints + LSH band buckets +
-    * shingle sets on storage, built offline by `writeDedupIndex`) and the
-    * sink receives only batch docs that are neither exact nor ≥threshold
-    * Jaccard near-dups of the corpus. foreachBatch is the right tool:
-    * the per-batch plan needs batch-only shapes (candidate `distinct`,
-    * pair joins) that a continuous stateful plan would turn into
-    * unbounded state, while the per-batch semantics are EXACTLY the
-    * incremental batch operator's — one oracle covers both. */
-  def nearDupScrubStream(docs: DataFrame, indexPath: String,
-                         idCol: String, textCol: String,
-                         sink: (DataFrame, Long) => Unit,
-                         shingleSize: Int = 3, bands: Int = 16,
-                         rowsPerBand: Int = 4, threshold: Double = 0.8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        sink(graft.operators.Dedup.incrementalDedupFromIndex(
-          batch.sparkSession, indexPath, batch, idCol, textCol,
-          shingleSize, bands, rowsPerBand, threshold), epochId)
-      }
-      .start()
-
   /** Streaming dedup with a GROWING corpus — the true production shape of
     * rolling ingestion: each micro-batch is deduped (1) against itself
     * (a batch can carry its own duplicates), (2) against everything
@@ -737,31 +602,4 @@ object StreamingExtensions {
     survivors.unpersist()
     ()
   }
-
-  /** Streaming quality gate: score every arriving document with the
-    * hashed linear classifier (`HashOps.linearMargin` — one codegen'd
-    * expression, exact integer margin) and pass only positive-margin
-    * docs. Completely STATELESS — no state store, no watermark, no
-    * shuffle — so it composes in front of any sink or downstream
-    * stateful stage at full ingest rate. The ingest-time form of the
-    * batch `quality_model_score` (same margin, same keep rule). */
-  def qualityGateStream(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .withColumn("margin", graft.functions.HashFunctions.linearMargin(
-        graft.functions.TextFunctions.tokens(lower(col(textCol)))))
-      .filter(col("margin") > 0)
-
-  /** Streaming dataset fingerprint: the running
-    * `Layout.datasetFingerprint` of everything ingested so far,
-    * maintained incrementally per micro-batch. Because the fingerprint
-    * is a COMMUTATIVE wrapping sum of per-row hashes, the streaming
-    * aggregate state is two longs and the result after any prefix of
-    * batches equals the batch fingerprint of the union of those batches
-    * — verify a 100 TB ingest continuously, never rescanning. Emit in
-    * complete/update mode. */
-  def fingerprintStream(records: DataFrame, cols: Seq[String]): DataFrame =
-    records
-      .select(graft.operators.Layout.rowHash(cols).as("h"))
-      .groupBy()
-      .agg(count(lit(1)).as("n_rows"), sum(col("h")).as("content_hash"))
 }

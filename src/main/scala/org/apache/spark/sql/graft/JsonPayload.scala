@@ -72,10 +72,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * existence-default bitmask, the per-field filter check and the
   * `FailureSafeParser` iterator.
   *
-  * `PruneJsonPayloadFields` narrows `schema` to the fields a plan reads.
+  * `PruneJsonPayloadFields` narrows `schema` to the fields a plan reads
+  * and keeps the payload's whole schema in `unpruned`. The fast path scans
+  * for the fields read; the slow path parses the whole schema and projects
+  * the fields read, so they are what `from_json` of the whole schema gives
+  * them. That matters for a payload with a syntax error inside an unread
+  * field's value: Spark's parser recovers from an error inside a field it
+  * converts (a partial record) but not inside one it skips.
   */
 case class DecodeJsonPayload(child: Expression, schema: StructType,
-                             timeZoneId: Option[String] = None)
+                             timeZoneId: Option[String] = None,
+                             unpruned: Option[StructType] = None)
     extends UnaryExpression with TimeZoneAwareExpression with CodegenFallback
     with ExpectsInputTypes {
   import DecodeJsonPayload._
@@ -93,8 +100,16 @@ case class DecodeJsonPayload(child: Expression, schema: StructType,
   @transient private lazy val options = new JSONOptions(Map.empty[String, String],
     timeZoneId.get, SQLConf.get.getConf(SQLConf.COLUMN_NAME_OF_CORRUPT_RECORD))
 
+  /** The schema the slow path parses. */
+  private def parsedSchema: StructType = unpruned.getOrElse(schema)
+
+  /** The ordinal in a `parsedSchema` record of each field of `schema`, or
+    * null when the two are one schema. */
+  @transient private lazy val projection: Array[Int] =
+    unpruned.map(u => schema.fieldNames.map(u.fieldIndex)).orNull
+
   @transient private lazy val parser: FailureSafeParser[UTF8String] = {
-    val nullableSchema = schema.asNullable
+    val nullableSchema = parsedSchema.asNullable
     ExprUtils.verifyColumnNameOfCorruptRecord(nullableSchema, options.columnNameOfCorruptRecord)
     val rawParser = new JacksonParser(
       StructType(nullableSchema.filterNot(_.name == options.columnNameOfCorruptRecord)),
@@ -148,7 +163,13 @@ case class DecodeJsonPayload(child: Expression, schema: StructType,
     val flat = decodeFlat(utf8)
     if (flat != null) return flat
     val rows = parser.parse(utf8)
-    if (rows.hasNext) rows.next() else null
+    if (!rows.hasNext) null
+    else {
+      val row = rows.next()
+      if (projection == null) row
+      else new GenericInternalRow(
+        projection.map(i => row.get(i, parsedSchema(i).dataType): Any))
+    }
   }
 
   override protected def withNewChildInternal(newChild: Expression): DecodeJsonPayload =
@@ -427,10 +448,11 @@ object DecodeJsonPayload {
   * `StreamingPipeline.fromJsonPayload`. When every use of its output `r` is
   * a field read `r.f` or the `isnotnull(r)` guard, the decode's schema is
   * narrowed to the fields read and each `r.f` is re-pointed at its new
-  * ordinal. The reference changelog reads 3 of the 20 fields. Skipped
-  * fields are still tokenized, so a syntax error anywhere in the payload
-  * nulls the record as before, and whether a record comes back does not
-  * depend on the schema, so the guard keeps the same rows.
+  * ordinal. The reference changelog reads 3 of the 20 fields. The
+  * narrowed decode keeps the schema it replaced as `unpruned`: a row the
+  * scanner does not accept is parsed with that schema and then projected,
+  * so each field read, and whether a record comes back at all, is what
+  * the unpruned decode gives, and the guard keeps the same rows.
   *
   * Catalyst has no rule for this: `OptimizeJsonExprs` prunes only a lone
   * `GetStructField(JsonToStructs)`, not a parse whose struct several
@@ -456,7 +478,8 @@ object PruneJsonPayloadFields extends Rule[LogicalPlan] {
         .filter(read => read.nonEmpty && read.size < d.schema.length)
         .map { read =>
           val kept = read.toSeq.sorted
-          val d2 = d.copy(schema = StructType(kept.map(d.schema(_))))
+          val d2 = d.copy(schema = StructType(kept.map(d.schema(_))),
+            unpruned = Some(d.unpruned.getOrElse(d.schema)))
           r.exprId -> ((d2, r.withDataType(d2.dataType), kept.zipWithIndex.toMap))
         }
     }.toMap

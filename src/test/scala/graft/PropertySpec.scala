@@ -77,19 +77,19 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("zValue: interleave is a bijection on 16-bit pairs") {
+  test("zOrderKey: interleave is a bijection on 16-bit pairs") {
     val pairs = Seq.fill(300)((rnd.nextLong().abs & 0xFFFFL,
       rnd.nextLong().abs & 0xFFFFL)) ++
       Seq((0L, 0L), (0xFFFFL, 0xFFFFL), (0xFFFFL, 0L), (0L, 0xFFFFL))
     val zs = pairs.toDF("a", "b")
       .select(col("a"), col("b"),
-        operators.Layout.zValue(col("a"), col("b")).as("z"))
+        operators.Layout.zOrderKey(col("a"), col("b")).as("z"))
       .as[(Long, Long, Long)].collect()
     zs.foreach { case (a, b, z) =>
       var (ra, rb) = (0L, 0L)
       (0 until 16).foreach { i =>
-        ra |= ((z >> (2 * i)) & 1L) << i
-        rb |= ((z >> (2 * i + 1)) & 1L) << i
+        ra |= ((z >> (2 * i + 1)) & 1L) << i
+        rb |= ((z >> (2 * i)) & 1L) << i
       }
       assert(ra == a && rb == b, s"z=$z lost ($a,$b) -> ($ra,$rb)")
     }
@@ -97,15 +97,15 @@ class PropertySpec extends SparkSpec {
     assert(zs.map(_._3).distinct.length == zs.map(t => (t._1, t._2)).distinct.length)
   }
 
-  test("zValue: monotone in each argument when the other is fixed") {
+  test("zOrderKey: monotone in each argument when the other is fixed") {
     val fixed = 0x1234L
     val as = (0L to 0xFFFFL by 97L).toSeq
     val zA = as.map((_, fixed)).toDF("a", "b")
-      .select(operators.Layout.zValue(col("a"), col("b")).as("z"))
+      .select(operators.Layout.zOrderKey(col("a"), col("b")).as("z"))
       .as[Long].collect()
     assert(zA.sliding(2).forall(w => w(0) < w(1)), "not monotone in a")
     val zB = as.map((fixed, _)).toDF("a", "b")
-      .select(operators.Layout.zValue(col("a"), col("b")).as("z"))
+      .select(operators.Layout.zOrderKey(col("a"), col("b")).as("z"))
       .as[Long].collect()
     assert(zB.sliding(2).forall(w => w(0) < w(1)), "not monotone in b")
   }

@@ -67,6 +67,18 @@ class StreamingSpec extends SparkSpec {
       "materializeChangelog", "readMaterialized"))
   }
 
+  test("StreamingExtensions' public defs are its stateful operators, none a batch wrapper") {
+    // a batch aggregate runs on a stream as it is, and a per-batch
+    // operator inside foreachBatch (the tests below do both), so a
+    // streaming wrapper added here fails this test
+    val defs = StreamingExtensions.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) && !m.isSynthetic)
+      .map(_.getName).filterNot(_.contains("$default$")).toSet
+    assert(defs === Set("runningUserTotals", "asofBackwardStream", "asofForwardStream",
+      "asofNearestStream", "cusumStream", "rateSpikeStream", "trendingStream", "driftStream",
+      "dedupStreamGrowingCorpus", "growCorpusBatch"))
+  }
+
   test("json payload roundtrip (Kafka wire parity, S2/S3/K1)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
@@ -172,7 +184,10 @@ class StreamingSpec extends SparkSpec {
       """{"id":66,"orig_destination_distance":.5,"hotel_id":660}""",
       """{"id":67,"orig_destination_distance":1.,"hotel_id":670}""",
       """{"id":68,"hotel_id":680,}""",
-      """{"id":69,/* c */"hotel_id":690}""")
+      """{"id":69,/* c */"hotel_id":690}""",
+      // a syntax error inside an unread field's value: from_json of the
+      // whole schema keeps the other fields, and so must the pruned decode
+      """{"id":70,"date_time":[1 2],"srch_ci":"2020-01-01","srch_co":"2020-01-03","hotel_id":700}""")
       .map(_.getBytes(UTF_8))
     val bytes = Seq(
       // invalid UTF-8 inside a read field, and inside an unread one
@@ -208,10 +223,10 @@ class StreamingSpec extends SparkSpec {
   /** The built-in reference: the former two-parse form, whose null filter
     * on the parsed struct Catalyst pushes below the projection as a
     * second `from_json`. */
-  private def fromJsonReference(raw: org.apache.spark.sql.DataFrame,
-      schema: org.apache.spark.sql.types.StructType = StreamingPipeline.expediaSchema) = raw
+  private def fromJsonReference(raw: org.apache.spark.sql.DataFrame) = raw
     .filter(col("value").isNotNull)
-    .select(from_json(col("value").cast("string"), schema).as("r"))
+    .select(from_json(col("value").cast("string"),
+      StreamingPipeline.expediaSchema).as("r"))
     .filter(col("r").isNotNull)
     .select("r.*")
 
@@ -248,7 +263,10 @@ class StreamingSpec extends SparkSpec {
 
   test("fromJsonPayload: the optimizer parses only the fields a query reads") {
     val raw = stagedPayloads()
-    val ref = fromJsonReference(raw)
+    // materialized: Catalyst would push a filter on the reference into a
+    // second from_json pruned to the filtered field, and a pruned from_json
+    // nulls the record of a syntax error inside an unread field (id 70)
+    val ref = fromJsonReference(raw).localCheckpoint()
     val read = Seq("srch_ci", "srch_co", "hotel_id")
     val changelog = StreamingPipeline.hotelsCount(
       StreamingPipeline.enrich(StreamingPipeline.fromJsonPayload(raw)))
@@ -521,13 +539,13 @@ class StreamingSpec extends SparkSpec {
     val whole = StreamingPipeline.fromJsonPayload(raw)
     assert(decodedFields(whole).map(_.size) == Seq(20))
     assert(sortedRows(whole) == sortedRows(fromJsonReference(raw)))
-    // against from_json of the 3 fields, not the 20 projected: from_json
-    // recovers from a syntax error inside a field it converts (a partial
-    // record) but not inside one it skips, so `"date_time": [1 2]` keeps
-    // the 3 read fields in the one and nulls them in the other
+    // against from_json of all 20 fields, projected: from_json recovers
+    // from a syntax error inside a field it converts (a partial record)
+    // but not inside one it skips, so `"date_time": [1 2]` keeps the 3
+    // read fields here, and the pruned decode must keep them too
     val pruned = StreamingPipeline.fromJsonPayload(raw).select(read.map(col): _*)
     assert(decodedFields(pruned) == Seq(read))
-    assert(sortedRows(pruned) == sortedRows(fromJsonReference(raw, decoders(1).schema)))
+    assert(sortedRows(pruned) == sortedRows(fromJsonReference(raw).select(read.map(col): _*)))
   }
 
   test("batch ivfTopK per micro-batch in foreachBatch equals ivfTopK over all queries") {
@@ -833,12 +851,19 @@ class StreamingSpec extends SparkSpec {
 
     val got = scala.collection.mutable.Map[Long, (String, Long, Long)]()
     val input = MemoryStream[(Long, String)]
-    val q = StreamingExtensions.substrScrubStream(
-      input.toDF().toDF("doc_id", "text"), idxPath, "doc_id", "text",
-      sink = (cleaned, _) => got.synchronized {
-        cleaned.collect().foreach(r =>
-          got(r.getLong(0)) = (r.getString(1), r.getLong(2), r.getLong(3)))
-      })
+    // each micro-batch probes the index and cuts its spans
+    val q = input.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        val spans = Dedup.substringSpansFromIndex(
+          spark, idxPath, batch, "doc_id", "text", shingleSize = 3, minRun = 6)
+        val cleaned = Dedup.applySpans(batch, spans, "doc_id", "text")
+        got.synchronized {
+          cleaned.collect().foreach(r =>
+            got(r.getLong(0)) = (r.getString(1), r.getLong(2), r.getLong(3)))
+        }
+        ()
+      }
+      .start()
     try {
       input.addData(batch)
       q.processAllAvailable()
@@ -866,11 +891,17 @@ class StreamingSpec extends SparkSpec {
 
     val perEpoch = scala.collection.mutable.Map[Long, Set[Long]]()
     val input = MemoryStream[(Long, String)]
-    val q = StreamingExtensions.nearDupScrubStream(
-      input.toDF().toDF("doc_id", "text"), idxPath, "doc_id", "text",
-      sink = (kept, epoch) => perEpoch.synchronized {
-        perEpoch(epoch) = kept.select("doc_id").as[Long].collect().toSet
-      })
+    // each micro-batch runs the incremental batch operator on the index
+    val q = input.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
+        val kept = Dedup.incrementalDedupFromIndex(
+          spark, idxPath, batch, "doc_id", "text")
+        perEpoch.synchronized {
+          perEpoch(epoch) = kept.select("doc_id").as[Long].collect().toSet
+        }
+        ()
+      }
+      .start()
     try {
       input.addData(b1); q.processAllAvailable()
       input.addData(b2); q.processAllAvailable()
@@ -892,8 +923,11 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     val input = MemoryStream[(Long, String)]
-    val gated = StreamingExtensions.qualityGateStream(
-      input.toDF().toDF("doc_id", "text"), "text")
+    // the batch query's margin and keep rule on a stream, stateless
+    val gated = input.toDF().toDF("doc_id", "text")
+      .withColumn("margin", functions.HashFunctions.linearMargin(
+        functions.TextFunctions.tokens(lower(col("text")))))
+      .filter(col("margin") > 0)
     val q = gated.writeStream.outputMode("append")
       .format("memory").queryName("quality_gate").start()
     try {
@@ -913,8 +947,11 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val rows = (0L until 500L).map(i => (i, s"v${i % 13}"))
     val input = MemoryStream[(Long, String)]
-    val q = StreamingExtensions.fingerprintStream(
-        input.toDF().toDF("k", "v"), Seq("k", "v"))
+    // the batch fingerprint's aggregate, run on a stream
+    val q = input.toDF().toDF("k", "v")
+      .select(graft.operators.Layout.rowHash(Seq("k", "v")).as("h"))
+      .groupBy()
+      .agg(count(lit(1)).as("n_rows"), sum(col("h")).as("content_hash"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("fp_stream").start()
     try {
@@ -1475,7 +1512,9 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[VecRow]
     // complete mode: the memory table always holds exactly the current
     // running aggregate — state is the one packed-triangle buffer
-    val q = StreamingExtensions.gramStream(input.toDF(), d)
+    val q = input.toDF()
+      .agg(count(lit(1)).as("n_rows"),
+        graft.functions.GramMatrix.gramMatrix(col("q"), d).as("gram"))
       .writeStream.format("memory").queryName("gram_stream_test")
       .outputMode("complete").start()
     try {
@@ -1499,7 +1538,15 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[UserEvent]
-    val q = StreamingExtensions.hllStream(input.toDS())
+    // the registers of batch agg_hll_estimate (p = 12) as an update-mode
+    // grouped max: bucket = top 12 bits of mix64(user_id), register =
+    // leading-zero rank of the other 52
+    val rest = s"h & ${(1L << 52) - 1}L"
+    val q = input.toDF()
+      .withColumn("h", functions.HashFunctions.mix64(col("user_id")))
+      .groupBy(shiftrightunsigned(col("h"), 52).as("bucket"))
+      .agg(max(expr(s"CASE WHEN $rest = 0 THEN 53L ELSE 53L - length(bin($rest)) END"))
+        .as("reg"))
       .writeStream.format("memory").queryName("hll_stream_test")
       .outputMode("update").start()
     def registers(): Map[Long, Long] =
@@ -1541,7 +1588,9 @@ class StreamingSpec extends SparkSpec {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[UserEvent]
     val qs = Seq(0.5, 0.95, 0.99)
-    val q = StreamingExtensions.quantileStream(input.toDS(), 0.01, qs)
+    val q = input.toDF()
+      .agg(count(lit(1)).as("n_rows"),
+        graft.functions.GKQuantile.gkBounds(col("value"), 0.01, qs).as("gk"))
       .writeStream.format("memory").queryName("gk_stream_test")
       .outputMode("update").start()
     def check(valuesSoFar: Seq[Double]): Unit = {
@@ -1587,7 +1636,9 @@ class StreamingSpec extends SparkSpec {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[UserEvent]
     val k = 8
-    val q = StreamingExtensions.topkStream(input.toDS(), k)
+    val q = input.toDF()
+      .agg(count(lit(1)).as("n_rows"),
+        graft.functions.HeavyHitters.mgCandidates(col("user_id"), k).as("mg"))
       .writeStream.format("memory").queryName("topk_stream_test")
       .outputMode("update").start()
     def check(keysSoFar: Seq[Long]): Unit = {
